@@ -23,168 +23,24 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver verifies the FIRST 50 entries of queries() against the DuckDB
-# oracle each round. Ordering policy (round 5+):
+# oracle each round. Ordering policy:
 #   1. _PRIORITY: this round's new/changed queries, explicit order.
-#   2. Any registered query with NO driver-green row yet (incl. _RECHECK).
+#   2. Any registered query with NO driver-green row yet.
 #   3. All driver-confirmed queries sorted STALEST-GREEN FIRST — the latest
 #      round in which each query hash-matched, read directly from the
 #      CORRECTNESS_r*.json files next to this file. This rotates the whole
 #      confirmed catalog through the 50-slot window every ~3 rounds instead
-#      of re-verifying the same registration-order prefix forever
-#      (VERDICT r4 "What's wrong" 2 / "Next round" 3).
-# All registered queries also pass the identical local replica gate
+#      of re-verifying the same registration-order prefix forever.
+# A query counts as confirmed exactly when some CORRECTNESS_r*.json row
+# hash-matched it (_latest_green_round), so there is no hand-kept list to
+# drift. All registered queries also pass the identical local replica gate
 # (tools/selfcheck.py) every round regardless of driver-window position.
 #
-# Round-2 lesson: count the front list AFTER adding new queries — keep
-# len(_PRIORITY) + unconfirmed <= 50 so nothing new lands outside the window.
+# Keep len(_PRIORITY) + unconfirmed <= 50 so nothing new lands outside the
+# window.
 
-# Green rows in CORRECTNESS_r01.json (round-1 driver window).
-_R1_CONFIRMED = frozenset({
-    "s5_scan_distinct", "p3_compound_filter", "p6_flag_sum_groups",
-    "f1_name_normalize", "f4_accession_synthesize", "f12_multiformat_dates",
-    "f13_date_window_flag", "w1_dedup_first", "w2_singletons",
-    "w4_argmin_per_group", "w6_dup_flag", "j1_left_link",
-    "j4_anti_new_records", "j5_semi", "j6_fuzzy_name_pairs", "j8_range_join",
-    "a1_group_count", "a2_distinct_count", "a4_share_of_total",
-    "a5_rollup_total", "a6_pivot_counts", "a9_latest_per_group",
-    "u2_union_by_name", "t4_snapshot_diff", "t2_watermark",
-    "qa_roster_filters", "dedup_exact_key", "dedup_exact_content_hash",
-    "text_token_stats", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "w10_sessionize_batch", "asof_join_events", "text_corpus_profile",
-    "dedup_cluster_canonical", "dedup_simhash", "ann_brute_force_topk",
-    "ann_lsh_bucket_topk", "ann_ivf_topk", "ann_kmeans_centroid_step",
-    "text_tfidf_top_terms", "text_lang_quality_fingerprint",
-    "text_repetition_metrics", "text_pii_scrub",
-    # mm_decode_stub retired r4 (replaced by mm_decode_image, real decoder)
-    "mm_frame_sample", "j2_inner_exact", "j3_full_outer", "j9_coalesce_fill",
-    "j10_suffix_compare",
-})
-
-# Green rows in CORRECTNESS_r02.json.
-_R2_CONFIRMED = frozenset({
-    "ann_ivf_trained_topk", "ann_ivf_recall", "j11_variant_expansion",
-    "j13_precedence_backfill", "w8_cascade_dup_flags", "w9_group_id",
-    "a7_formatted_matrix", "a8_missing_level", "a10_melt_count_pivot",
-    "u4_dedup_ignoring", "u5_setdiff_assert", "p4_anti_membership_ci",
-    "p5_empty_row_drop", "p7_sentinel_scan", "f2_name_concat_flip",
-    "f5_accession_decompose", "f7_text_extraction", "f10_status_remap",
-    "f11_notes_template", "f14_conditional_bundle", "f16_char_counts",
-    "f17_warning_concat", "t6_loss_prevention", "s11_chunk_assignment",
-    "p2_drop_regex", "a3_flag_colsums", "w3_group_size_split",
-    "w5_multiple_match_flag", "u1_union_provenance", "j12_dim_lookup",
-    "f3_prefix_strip", "f6_length_keyed_rewrite", "f8_lab_standardize",
-    "f9_reason_normalize", "f15_validation_battery",
-    "f18_lineage_list_hygiene", "s1_na_normalize", "fuzzy_band_routing",
-    "t1_ledger_dedup", "dedup_embedding_cosine", "pipe_template_route",
-    "pipe_roster_contract", "pipe_elr_new_records",
-    "pipe_roster_compile_chunks", "pipe_gap_report", "pipe_dup_triage",
-})
-
-# Green rows in CORRECTNESS_r03.json (j6b is the deliberate no-oracle
-# rows-only row and stays out of every confirmed set).
-_R3_CONFIRMED = frozenset({
-    "decontam_ngram_overlap", "split_leakage_safe", "sample_domain_mix",
-    "pack_token_budget", "qa_prematch_flags", "a10b_week_over_week",
-    "x_packed_coexplode", "skew_salted_agg", "u3_distinct_rows",
-    "p1_select_contract", "u6_review_union_running", "f19_initials",
-    "f20_to_json", "w7_custom_order_dedup", "u7_priority_dedup",
-    "t3_ttl_expiry", "t5_new_arrivals", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_cluster_canonical",
-    "ann_ivf_trained_topk", "ann_ivf_recall", "dedup_ngram_prefix",
-    "pipe_wdrs_qa", "t7_era_fence", "pipe_elr_roster_vars",
-    "qa_match_in_wdrs_keep_na", "pipe_wdrs_qa_summary",
-    "pipe_roster_missing_deleted", "pipe_elr_accessions",
-    "pipe_date_mismatch_triage", "pipe_lab_monitoring",
-    "pipe_missing_lineage_recovery", "st_event_counts_complete",
-    "st_daily_window_counts", "pipe_missing_reason_report",
-    "pipe_filtered_observations_check", "w11_conditional_source_dedup",
-    "pipe_sgtf_weekly", "f21_tweak_gisaid_id", "pipe_corpus_curation",
-    "dedup_semantic_cells", "sample_stratified_exact",
-    "evt_retention_cohorts", "evt_rollup_multigrain", "evt_funnel_steps",
-    "decontam_bloom_prefilter", "st_click_attribution", "evt_active_users",
-})
-
-# Green rows in CORRECTNESS_r04.json (49 hash-green; j6b stays rows-only).
-# Both round-4 _RECHECK entries (dedup_semantic_cells,
-# evt_rollup_multigrain) re-verified green and are folded back in here.
-_R4_CONFIRMED = frozenset({
-    "dedup_lines_global", "simhash_near_dup_join", "unigram_doc_score",
-    "repeated_span_fraction", "minhash_index_probe", "ivf_assign_batch",
-    "j6c_osa_lev_delta", "mm_decode_image", "dedup_semantic_cells",
-    "evt_rollup_multigrain", "text_gopher_rules",
-    "text_remove_repeated_spans", "text_fix_mojibake",
-    "pipe_incremental_corpus", "sample_temperature", "evt_anomaly_zscore",
-    "ann_pq_encode", "ann_pq_topk", "ann_pq_trained_topk", "ann_pq_recall",
-    "s5_scan_distinct", "p3_compound_filter", "p6_flag_sum_groups",
-    "f1_name_normalize", "f4_accession_synthesize", "f12_multiformat_dates",
-    "f13_date_window_flag", "w1_dedup_first", "w2_singletons",
-    "w4_argmin_per_group", "w6_dup_flag", "j1_left_link",
-    "j4_anti_new_records", "j5_semi", "j6_fuzzy_name_pairs", "j8_range_join",
-    "a1_group_count", "a2_distinct_count", "a4_share_of_total",
-    "a5_rollup_total", "a6_pivot_counts", "a9_latest_per_group",
-    "u2_union_by_name", "t4_snapshot_diff", "t2_watermark",
-    "qa_roster_filters", "dedup_exact_key", "dedup_exact_content_hash",
-    "text_token_stats",
-})
-
-# Green rows in CORRECTNESS_r05.json (49 hash-green; j6b stays rows-only).
-# Both round-5 _RECHECK entries (text_lang_quality_fingerprint,
-# pipe_corpus_curation) re-verified green and fold back in here.
-_R5_CONFIRMED = frozenset({
-    "ann_brute_force_topk", "ann_ivf_topk", "ann_ivfpq_recall",
-    "ann_ivfpq_residual_topk", "ann_ivfpq_topk", "ann_kmeans_centroid_step",
-    "ann_lsh_bucket_topk", "asof_join_events", "bigram_doc_score",
-    "bm25_index_probe", "bm25_topk", "bpe_merge_topk", "bpe_train_step",
-    "dedup_simhash", "dedup_url_canonical", "emb_random_projection",
-    "evt_hll_daily_users", "evt_json_props_stats",
-    "graph_pagerank_authority", "html_boilerplate_strip",
-    "layout_zorder_files", "link_fellegi_sunter", "mm_audio_features",
-    "mm_audio_window_energy", "mm_decode_audio", "mm_decode_image",
-    "mm_frame_sample", "mm_image_dhash_hamming_pairs",
-    "mm_image_dhash_near_dup", "mm_probe_media", "pipe_corpus_curation",
-    "pq_encode_batch", "qa_benford_prices", "quality_linear_classifier",
-    "quality_logreg_eval", "quality_logreg_train", "sim_tfidf_cosine_topk",
-    "sketch_countmin_heavy", "sketch_histogram_quantiles",
-    "sketch_hll_distinct", "sketch_hll_set_ops", "text_chunk_windows",
-    "text_corpus_profile", "text_lang_quality_fingerprint",
-    "text_pii_scrub", "text_repetition_metrics", "text_tfidf_top_terms",
-    "train_shard_manifest", "w10_sessionize_batch",
-})
-
-# Green rows in CORRECTNESS_r06.json (50 hash-green; j6b stays rows-only).
-_R6_CONFIRMED = frozenset({
-    "ann_ivfpq_index_probe", "dedup_substring_global",
-    "mm_video_frame_decode", "bpe_encode_corpus",
-    "ann_ivfpq_batch_search", "dedup_substring_acct",
-    "emb_int8_quantize", "ann_int8_recall", "ann_ivfsq_topk",
-    "ann_ivfpq_topk", "ann_ivfpq_recall", "ann_ivfpq_residual_topk",
-    "sim_tfidf_cosine_topk", "mm_image_dhash_hamming_pairs",
-    "dedup_url_canonical", "qa_benford_prices", "j2_inner_exact",
-    "j3_full_outer", "j9_coalesce_fill", "j10_suffix_compare",
-    "j11_variant_expansion", "j13_precedence_backfill",
-    "w8_cascade_dup_flags", "w9_group_id", "a7_formatted_matrix",
-    "a8_missing_level", "a10_melt_count_pivot", "u4_dedup_ignoring",
-    "u5_setdiff_assert", "p4_anti_membership_ci", "p5_empty_row_drop",
-    "p7_sentinel_scan", "f2_name_concat_flip", "f5_accession_decompose",
-    "f7_text_extraction", "f10_status_remap", "f11_notes_template",
-    "f14_conditional_bundle", "f16_char_counts", "f17_warning_concat",
-    "t6_loss_prevention", "s11_chunk_assignment", "p2_drop_regex",
-    "a3_flag_colsums", "w3_group_size_split", "w5_multiple_match_flag",
-    "u1_union_provenance", "j12_dim_lookup", "f3_prefix_strip",
-})
-
-# Round-10 priorities (VERDICT r9 "Next round" 2): the 16 queries
-# whose latest driver-green is still r4 — the stalest cohort in the
-# registry — explicitly first. The new st_keepna_ttl rides the
-# unconfirmed-first rule into the window without a _PRIORITY entry:
-# 16 priority + 1 new + j6b = 18 front slots leave 32 stalest-first
-# rotation slots, which the 42-row r5-green cohort starts filling
-# (the remaining ~10 r5 rows rotate through in r11). NOT
-# re-prioritized (r7/r8 precedent — plan-only changes, byte-identical
-# values, selfcheck re-green at both fixture scales): the PQ/IVF-PQ
-# families riding this round's pack-sort-posexplode seed ranks and
-# the decimal(15,6) LUT-entry bound, and the PCA family riding the
-# explicit NULL-propagation branch in the sweep normalize.
+# Round-10 priorities: the 16 queries whose latest driver-green was r4 —
+# the stalest cohort in the registry — explicitly first.
 _PRIORITY = [
     "ann_pq_encode", "ann_pq_recall", "ann_pq_topk",
     "ann_pq_trained_topk", "evt_anomaly_zscore", "ivf_assign_batch",
@@ -195,97 +51,14 @@ _PRIORITY = [
     "unigram_doc_score",
 ]
 
-# Green rows in CORRECTNESS_r07.json (49 hash-green; j6b stays
-# rows-only by design).
-_R7_CONFIRMED = frozenset({
-    "dsir_select_topk", "dsir_gumbel_topk", "qa_ks_drift",
-    "emb_mahalanobis_outliers", "emb_pca_top_component",
-    "emb_remove_top_component", "dedup_minhash_calibration",
-    "text_char_entropy", "decontam_minhash", "qa_chi2_independence",
-    "evt_markov_transitions", "quality_logreg_calibration",
-    "ann_ivfsq_index_probe", "ann_ivfsq_batch_search",
-    "ann_ivfsq_recall", "dedup_substring_rewrite",
-    "mm_audio_fingerprint_pairs", "mm_audio_fingerprint_near_dup",
-    "ann_ivf_sampled_topk", "ann_ivfsq_topk", "qa_benford_prices",
-    "pipe_dedup_report", "ann_binary_topk", "ann_binary_recall",
-    "ann_ivfbq_topk", "ann_ivfbq_index_probe",
-    "ann_binary_rerank_topk", "ann_binary_rerank_recall",
-    "ann_ivfbq_batch_search", "ann_ivfbq_recall",
-    "tok_fertility_report", "dedup_cluster_size_dist", "qa_psi_drift",
-    "f6_length_keyed_rewrite", "f8_lab_standardize",
-    "f9_reason_normalize", "f15_validation_battery",
-    "f18_lineage_list_hygiene", "s1_na_normalize",
-    "fuzzy_band_routing", "t1_ledger_dedup", "dedup_embedding_cosine",
-    "pipe_template_route", "pipe_roster_contract",
-    "pipe_elr_new_records", "pipe_roster_compile_chunks",
-    "pipe_gap_report", "pipe_dup_triage", "dedup_minhash_lsh",
-})
-
-# Green rows in CORRECTNESS_r08.json (49 hash-green; j6b stays
-# rows-only by design).
-_R8_CONFIRMED = frozenset({
-    "j6d_osa_witness", "qa_cvm_drift", "qa_psi_sliding",
-    "emb_pca_top_component", "emb_remove_top_component",
-    "ann_ivfpq_residual_topk", "ann_ivfpq_topk", "decontam_minhash",
-    "ann_ivfpq_rerank_topk", "ann_ivfpq_rerank_recall",
-    "emb_pca_top2_components", "pipe_decontam_report",
-    "emb_mrl_truncate_recall", "dedup_ngram_jaccard",
-    "dedup_ngram_prefix", "dedup_cluster_canonical",
-    "ann_ivf_trained_topk", "ann_ivf_recall", "w7_custom_order_dedup",
-    "u7_priority_dedup", "f19_initials", "f20_to_json", "t3_ttl_expiry",
-    "p1_select_contract", "u3_distinct_rows", "u6_review_union_running",
-    "t5_new_arrivals", "x_packed_coexplode", "skew_salted_agg",
-    "qa_prematch_flags", "a10b_week_over_week", "decontam_ngram_overlap",
-    "split_leakage_safe", "sample_domain_mix", "pack_token_budget",
-    "pipe_wdrs_qa", "t7_era_fence", "pipe_elr_roster_vars",
-    "qa_match_in_wdrs_keep_na", "pipe_wdrs_qa_summary",
-    "pipe_roster_missing_deleted", "pipe_elr_accessions",
-    "pipe_date_mismatch_triage", "pipe_lab_monitoring",
-    "pipe_missing_lineage_recovery", "st_event_counts_complete",
-    "st_daily_window_counts", "pipe_missing_reason_report",
-    "pipe_filtered_observations_check",
-})
-
-# Green rows in CORRECTNESS_r09.json (49 hash-green; j6b stays
-# rows-only by design).
-_R9_CONFIRMED = frozenset({
-    "decontam_bloom_prefilter", "evt_active_users", "evt_funnel_steps",
-    "evt_retention_cohorts", "f21_tweak_gisaid_id", "pipe_sgtf_weekly",
-    "sample_stratified_exact", "st_click_attribution",
-    "w11_conditional_source_dedup", "decontam_minhash",
-    "ann_ivfpq_residual_topk", "emb_pca_top2_components",
-    "st_decontam_screen", "st_ivf_assign", "decontam_semantic",
-    "decontam_semantic_recall", "emb_isotropy_report",
-    "s5_scan_distinct", "p3_compound_filter", "p6_flag_sum_groups",
-    "f1_name_normalize", "f4_accession_synthesize",
-    "f12_multiformat_dates", "f13_date_window_flag", "w1_dedup_first",
-    "w2_singletons", "w4_argmin_per_group", "w6_dup_flag",
-    "j1_left_link", "j4_anti_new_records", "j5_semi",
-    "j6_fuzzy_name_pairs", "j8_range_join", "a1_group_count",
-    "a2_distinct_count", "a4_share_of_total", "a5_rollup_total",
-    "a6_pivot_counts", "a9_latest_per_group", "u2_union_by_name",
-    "t4_snapshot_diff", "t2_watermark", "qa_roster_filters",
-    "dedup_exact_key", "dedup_exact_content_hash", "text_token_stats",
-    "dedup_semantic_cells", "evt_rollup_multigrain",
-    "dedup_lines_global",
-})
-
-_DRIVER_CONFIRMED = (_R1_CONFIRMED | _R2_CONFIRMED | _R3_CONFIRMED
-                     | _R4_CONFIRMED | _R5_CONFIRMED | _R6_CONFIRMED
-                     | _R7_CONFIRMED | _R8_CONFIRMED | _R9_CONFIRMED)
-
-# Queries whose behavior changed after their last driver-green row; force
-# them back into the front-50 window even though they are confirmed.
-# Round 7: every changed query is already listed in _PRIORITY above.
-_RECHECK = frozenset()
-
 
 def _latest_green_round() -> dict[str, int]:
     """Latest round each query hash-matched, from CORRECTNESS_r*.json.
 
-    Used to rotate the confirmed tail of queries() stalest-first so every
-    confirmed query gets a fresh driver-green row every ~3 rounds. Falls
-    back to {} (registration order) if the files are unreadable.
+    Its keys are the confirmed queries; queries() rotates them
+    stalest-first so every confirmed query gets a fresh driver-green row
+    every ~3 rounds. Falls back to {} (every query unconfirmed, in
+    registration order) if the files are unreadable.
     """
     latest: dict[str, int] = {}
     try:
@@ -308,16 +81,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     names = list(catalog.Q)
     reg_idx = {n: i for i, n in enumerate(names)}
     prio = [n for n in _PRIORITY if n in catalog.Q]
-    rest_unconfirmed = [n for n in names
-                        if (n not in _DRIVER_CONFIRMED or n in _RECHECK)
-                        and n not in prio]
-    stale = _latest_green_round()
-    confirmed = sorted(
-        (n for n in names
-         if n in _DRIVER_CONFIRMED and n not in _RECHECK and n not in prio),
-        key=lambda n: (stale.get(n, 0), reg_idx[n]))
-    ordered = prio + rest_unconfirmed + confirmed
-    return {n: catalog.Q[n] for n in ordered}
+    green = _latest_green_round()
+    rest = [n for n in names if n not in prio]
+    unconfirmed = [n for n in rest if n not in green]
+    confirmed = sorted((n for n in rest if n in green),
+                       key=lambda n: (green[n], reg_idx[n]))
+    return {n: catalog.Q[n] for n in prio + unconfirmed + confirmed}
 
 
 def oracle_sql() -> dict[str, str]:

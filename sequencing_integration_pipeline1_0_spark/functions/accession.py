@@ -21,9 +21,6 @@ RE_SEQUENCE_ACCESSION = r"^(hCoV-19/)?USA/WA-.*/[0-9]{4}$"
 RE_AEGIS = r"^ASC\d*-B.*"
 RE_LABCORP = r"^LC\d*$"
 RE_HELIX = r"^USA/WA-CDC-STM-.*"
-#: quality_filters.R:30-32 — lineage shapes.
-RE_LINEAGE_LOOSE = r"[A-Za-z]{1,2}\.[0-9]{1,2}"
-RE_LINEAGE_STRICT = r"^[A-Z]+(\.\d+)*$"
 #: valid-year suffix check (quality_filters.R:153-163)
 RE_VALID_YEAR_SUFFIX = r"(2020|2021|2022|2023|2024|2025)$"
 
@@ -34,15 +31,6 @@ def _c(col: Column | str) -> Column:
 
 def is_sequence_accession(col: Column | str) -> Column:
     return _c(col).rlike(RE_SEQUENCE_ACCESSION)
-
-
-def is_lineage(col: Column | str, strict: bool = True) -> Column:
-    return _c(col).rlike(RE_LINEAGE_STRICT if strict else RE_LINEAGE_LOOSE)
-
-
-def is_all_digits(col: Column | str) -> Column:
-    """CASE_ID all-numeric check (quality_filters.R:153)."""
-    return _c(col).rlike(r"^[0-9]+$")
 
 
 def space_count(col: Column | str) -> Column:

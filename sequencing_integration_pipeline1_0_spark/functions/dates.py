@@ -139,18 +139,6 @@ def within_days(a: Column | str, b: Column | str, n: int = 14) -> Column:
     return F.abs(F.datediff(_c(a), _c(b))) <= n
 
 
-def older_than_days(col: Column | str, n: int = 60,
-                    as_of: Column | None = None) -> Column:
-    """TTL expiry predicate (keep_na 60-day retention, KEEP_NA:706-720)."""
-    ref = as_of if as_of is not None else F.current_date()
-    return _c(col) < F.date_sub(ref, n)
-
-
-def year_month(col: Column | str) -> Column:
-    """yyyy-MM bucketing (gap_data.Rmd:398-405, wdrs_qa_main.R:85)."""
-    return F.date_format(_c(col), "yyyy-MM")
-
-
 # --- MMWR/CDC epidemiological weeks (uw_sgtf.Rmd:66-75) -----------------
 
 def epi_week_start(col: Column | str) -> Column:

@@ -11,7 +11,7 @@ direction the reference itself took with lab_variables.rds
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -106,9 +106,3 @@ def notes_template(lineage: Column | str, as_of: Column | None = None) -> Column
         F.lit(" on "), F.date_format(d, "yyyy-MM-dd"),
         F.lit(". Lineage assignments may change over time."),
     )
-
-
-def coalesce_columns(df: DataFrame, out: str, candidates: Sequence[str]) -> DataFrame:
-    """N-ary coalesce across harvested columns (read_all_data.Rmd:226-236)."""
-    present = [c for c in candidates if c in df.columns]
-    return df.withColumn(out, F.coalesce(*[F.col(c) for c in present]))

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -59,18 +59,6 @@ def pivot_counts(df: DataFrame, row_key: str, pivot_key: str,
     p = counts.groupBy(row_key).pivot(pivot_key, list(pivot_values) if pivot_values else None)
     out = p.agg(F.first("__n"))
     return out.na.fill(0, [c for c in out.columns if c != row_key])
-
-
-def melt_count_pivot(df: DataFrame, id_col: str, value_cols: Sequence[str],
-                     var_name: str = "variable") -> DataFrame:
-    """A10: gather flag columns -> count by id -> re-widen
-    (wdrs_qa_main.R:303-340). Uses the built-in unpivot/melt."""
-    melted = df.unpivot(id_col, list(value_cols), var_name, "__value")
-    return (melted.filter(F.col("__value").isNotNull())
-                  .groupBy(var_name)
-                  .pivot(id_col)
-                  .agg(F.count(F.lit(1)))
-                  .na.fill(0))
 
 
 def with_missing_level(df: DataFrame, col: str,

@@ -38,12 +38,6 @@ def classify_changes(added: DataFrame, removed: DataFrame,
     return out
 
 
-def new_arrivals(today: DataFrame, yesterday: DataFrame,
-                 keys: Sequence[str]) -> DataFrame:
-    """T5: today ∖ yesterday on a key subset (KEEP_NA...Rmd:88-90)."""
-    return today.join(yesterday.select(*keys).distinct(), list(keys), "left_anti")
-
-
 def ledger_dedup(batch: DataFrame, ledger: DataFrame,
                  keys: Sequence[str]) -> DataFrame:
     """T1: processed-record ledger anti-join — cumulative feeds
@@ -103,12 +97,3 @@ def loss_prevention(inputs: DataFrame, outputs: Sequence[DataFrame],
     if seen is None:
         return inputs
     return inputs.join(seen, [key], "left_anti")
-
-
-def assert_conserved(parts: Sequence[DataFrame], whole: DataFrame) -> None:
-    """Conservation check (elr.Rmd:322 stopifnot(nrow(a)+nrow(b)==nrow(all)));
-    driver-side counts only — cheap actions on aggregates."""
-    total = sum(p.count() for p in parts)
-    n = whole.count()
-    if total != n:
-        raise AssertionError(f"conservation violated: parts={total} whole={n}")

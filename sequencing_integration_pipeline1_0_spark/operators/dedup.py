@@ -93,19 +93,3 @@ def cascade_dup_flags(df: DataFrame, tiers: Sequence[Sequence[str]],
             cond = cond & ~counts[j]
         cols[f"{prefix}{i + 1}"] = F.when(cond, F.lit(1))
     return df.withColumns(cols)
-
-
-def dedup_ignoring(df: DataFrame, ignore: Sequence[str]) -> DataFrame:
-    """U4: distinct across all columns except `ignore` (fuzzy.Rmd:752-753).
-    Keeps an arbitrary-but-deterministic survivor via first-wins on the
-    ignored columns themselves."""
-    keys = [c for c in df.columns if c not in set(ignore)]
-    return dedup_first(df, keys, [F.col(c).asc_nulls_last() for c in ignore] or [F.lit(1)])
-
-
-def priority_dedup(df: DataFrame, keys: Sequence[str], priority: Column,
-                   order_cols: Sequence[str | Column] = ()) -> DataFrame:
-    """U7: keep one copy per key from the preferred source, all copies
-    from others is the reference's shape (read_all_data.Rmd:333-346);
-    generalized: first-wins ordered by `priority` then tiebreakers."""
-    return dedup_first(df, keys, [priority, *list(order_cols), *[F.col(k) for k in keys]])

@@ -69,6 +69,29 @@ def _gate_all_pairs_baseline(df: DataFrame, op: str,
     return n
 
 
+def rank_topk(pairs: DataFrame, score: str, k: int, *,
+              desc: bool = False, key: str = "id") -> DataFrame:
+    """The one top-k every ranked similarity operator ends with: keep
+    each `key`'s k best (key, neighbor_id, score) rows, ordered by
+    score (ascending, or descending with desc=True) then neighbor_id,
+    so ties break on id and the ranking is total and deterministic
+    across engines. Returns (id, neighbor_id, score, rank), rank 1..k
+    — `key` is renamed to id only after ranking."""
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy(key).orderBy(order, F.col("neighbor_id"))
+    return (pairs.withColumn("rank", F.row_number().over(w))
+                 .filter(F.col("rank") <= k)
+                 .select(F.col(key).alias("id"), "neighbor_id", score,
+                         "rank"))
+
+
+def _vec_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v, nv): the id/vector pair the cosine and IVF paths start
+    from, with the norm computed once per vector."""
+    return (df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+              .withColumn("nv", norm(F.col("v"))))
+
+
 def brute_force_topk(df: DataFrame, id_col: str, vec_col: str, *,
                      k: int = 5, round_to: int = 6,
                      spread: bool = True) -> DataFrame:
@@ -106,11 +129,7 @@ def _brute_force_topk_ungated(df: DataFrame, id_col: str, vec_col: str,
               .withColumn("cos_sim",
                           F.round(dot(F.col("va"), F.col("vb"))
                                   / (F.col("na") * F.col("nb")), round_to)))
-    w = Window.partitionBy("id").orderBy(F.col("cos_sim").desc(),
-                                         F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k)
-                 .select("id", "neighbor_id", "cos_sim", "rank"))
+    return rank_topk(pairs, "cos_sim", k, desc=True)
 
 
 def sign_bucket(vec: Column, dims: int = 8) -> Column:
@@ -140,11 +159,7 @@ def lsh_topk(df: DataFrame, id_col: str, vec_col: str, *,
               .withColumn("cos_sim",
                           F.round(dot(F.col("va"), F.col("vb"))
                                   / (F.col("na") * F.col("nb")), round_to)))
-    w = Window.partitionBy("id").orderBy(F.col("cos_sim").desc(),
-                                         F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k)
-                 .select("id", "neighbor_id", "cos_sim", "rank"))
+    return rank_topk(pairs, "cos_sim", k, desc=True)
 
 
 def _packed_cells(cents: DataFrame) -> DataFrame:
@@ -191,11 +206,13 @@ def _cell_prs(vc: str, nvc: str, round_to: int,
             f"'negid', -c.cell_id{ccv}))")
 
 
-def _best_cell(vc: str, nvc: str, round_to: int) -> Column:
-    """argmax cell as a struct (csim, negid): array_max over the
-    packed sims — crank==1 of the old window, computed MAP-SIDE with
-    no exchange and no per-id sort. cell_id = -result['negid']."""
-    return F.expr(f"array_max({_cell_prs(vc, nvc, round_to)})")
+def _nearest_cell(round_to: int, vc: str = "v",
+                  nvc: str = "nv") -> Column:
+    """The nearest cell's id as `cell_id`: array_max over the packed
+    sims (csim, negid) — crank==1 of the old window, computed
+    MAP-SIDE with no exchange and no per-id sort."""
+    return (-F.expr(f"array_max({_cell_prs(vc, nvc, round_to)})")
+            ["negid"]).alias("cell_id")
 
 
 def _top_cells(vc: str, nvc: str, nprobe: int, round_to: int,
@@ -206,6 +223,81 @@ def _top_cells(vc: str, nvc: str, nprobe: int, round_to: int,
     return F.expr(f"slice(sort_array("
                   f"{_cell_prs(vc, nvc, round_to, with_cv)}, false), "
                   f"1, {nprobe})")
+
+
+#: salt ways of every IVF inverted-list meet (_ivf_meet): the index
+#: side replicates each cell row CELL_SALT times and probe rows take
+#: pmod(xxhash64(qid)), so scoring parallelism is n_cells * CELL_SALT
+#: tasks even when n_cells < cores.
+CELL_SALT = 16
+
+
+def _coarse_ranks(base: DataFrame, coarse: DataFrame, nprobe: int,
+                  round_to: int, carry: tuple[str, ...] = (),
+                  with_cv: bool = False) -> DataFrame:
+    """(id, *carry, cell_id, crank[, ccv]) for the nprobe cells
+    nearest each (id, v, nv) row of base, crank 1 = nearest: the probe
+    ranks run MAP-SIDE over the one-row packed codebook (sort_array
+    desc == the window's ordering, see _cell_prs) — no n x n_cells
+    exchange, no per-id window sort. with_cv also emits each cell's
+    centroid as ccv (the residual path)."""
+    ccv = [F.col("s.ccv").alias("ccv")] if with_cv else []
+    return (base.join(F.broadcast(_packed_cells(coarse)))
+                .select("id", *carry,
+                        F.posexplode(_top_cells(
+                            "v", "nv", max(1, nprobe), round_to,
+                            with_cv)).alias("pos", "s"))
+                .select("id", *carry, (-F.col("s.negid")).alias("cell_id"),
+                        (F.col("pos") + 1).alias("crank"), *ccv))
+
+
+def _ivf_meet(probe: DataFrame, entries: DataFrame,
+              payload: tuple[str, ...], score: dict[str, str],
+              carry: tuple[str, ...] = ()) -> DataFrame:
+    """The inverted-list candidate meet every quantized IVF family
+    shares. entries (neighbor_id, cell_id, *payload) pack into one
+    list row per cell; probe rows (qid, probe_cell, *query columns)
+    meet them on a salted cell key; each matched list is scored
+    INSIDE one transform and only then exploded. Returns (qid,
+    neighbor_id, *score, *carry); score maps each output field to its
+    generated-SQL expression over the query row and the entry `e`, and
+    carry names probe columns that ride through to the output.
+
+    Shape: the cell key salts CELL_SALT ways (the list replicated per
+    salt, probe rows take pmod(xxhash64(qid))); the probe side is a
+    USER-numbered hash repartition on the join keys — AQE's byte-based
+    coalescing would see the slim pre-scoring rows, fold the exchange
+    to a handful of partitions and serialize the CPU-heavy scoring
+    (measured 5x on sf0.1 for the PQ fold), while a user-specified
+    count is exempt and already satisfies the join's clustering; the
+    meet is a hinted SHUFFLE_HASH join (no sort of the packed lists,
+    and nothing corpus-sized is ever broadcast at plan time — AQE may
+    still promote it at run time when the built index is genuinely
+    small). Each (query, candidate) pair appears at most once because
+    the index side is single-assignment; the query's own id is
+    filtered out inside the scoring transform."""
+    inv = (entries.groupBy("cell_id")
+                  .agg(F.collect_list(F.struct("neighbor_id", *payload))
+                        .alias("entries"))
+                  .withColumn("isalt", F.explode(F.array(
+                      *[F.lit(r) for r in range(CELL_SALT)]))))
+    scored = (probe.withColumn("salt",
+                               F.pmod(F.xxhash64("qid"),
+                                      F.lit(CELL_SALT)).cast("int"))
+                   .repartition(probe.sparkSession.sparkContext
+                                .defaultParallelism, "probe_cell", "salt")
+                   .join(inv.hint("shuffle_hash"),
+                         (F.col("probe_cell") == F.col("cell_id"))
+                         & (F.col("salt") == F.col("isalt"))))
+    fields = "".join(f", '{n}', {sql}" for n, sql in score.items())
+    hits = F.expr(
+        "transform(filter(entries, e -> e.neighbor_id != qid), "
+        f"e -> named_struct('neighbor_id', e.neighbor_id{fields}))")
+    return (scored.select("qid", *carry, F.explode(hits).alias("h"))
+                  .select("qid",
+                          F.col("h.neighbor_id").alias("neighbor_id"),
+                          *[F.col(f"h.{n}").alias(n) for n in score],
+                          *carry))
 
 
 def train_ivf_codebook(df: DataFrame, id_col: str, vec_col: str, *,
@@ -235,8 +327,7 @@ def train_ivf_codebook(df: DataFrame, id_col: str, vec_col: str, *,
     pca_power_state discipline; measured 13.7 s -> 5.4 s on the
     residual IVF-PQ search at sf0.1, values identical).
     """
-    base = (df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
+    base = _vec_base(df, id_col, vec_col)
     cents = (base.orderBy("id").limit(n_cells)
                  .select(F.col("id").alias("cell_id"), F.col("v").alias("cv")))
     for _ in range(iters):
@@ -244,9 +335,7 @@ def train_ivf_codebook(df: DataFrame, id_col: str, vec_col: str, *,
         # the ONE-ROW packed codebook — no n x n_cells exchange, no
         # per-id window sort; ranks bit-identical (see _cell_prs)
         assign = (base.join(F.broadcast(_packed_cells(cents)))
-                      .select((-_best_cell("v", "nv",
-                                           round_to)["negid"])
-                              .alias("cell_id"), "v"))
+                      .select(_nearest_cell(round_to), "v"))
         comp = assign.select("cell_id", F.posexplode("v").alias("pos", "val"))
         q = F.round(F.col("val").cast("double"), round_to).cast("decimal(18,6)")
         means = (comp.groupBy("cell_id", "pos")
@@ -298,8 +387,7 @@ def semantic_nn_dedup(df: DataFrame, id_col: str, vec_col: str, *,
     form re-derives the cell assignment on each of its three branches
     (pair left, pair right, emit-all) — linear work; a production run
     at 100 TB checkpoints the assignment once instead."""
-    base = (df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
+    base = _vec_base(df, id_col, vec_col)
     if n_cells is None:
         n_cells = max(min_cells, base.count() // target_cell_size)
     cents = (base.orderBy("id").limit(n_cells)
@@ -308,9 +396,7 @@ def semantic_nn_dedup(df: DataFrame, id_col: str, vec_col: str, *,
     # r10 (guide §2.4): map-side argmax over the one-row packed
     # codebook — no n x n_cells exchange, no per-id window sort
     idx = (base.join(F.broadcast(_packed_cells(cents)))
-               .select("id", "v", "nv",
-                       (-_best_cell("v", "nv",
-                                    round_to)["negid"]).alias("cell_id")))
+               .select("id", "v", "nv", _nearest_cell(round_to)))
     b = (idx.select(F.col("id").alias("nn_id"), F.col("v").alias("vb"),
                     F.col("nv").alias("nb"), "cell_id")
             .withColumn("__b", F.pmod(F.xxhash64("nn_id"),
@@ -405,9 +491,7 @@ def _semantic_contamination_ungated(corpus: DataFrame, bench: DataFrame,
     bench once and reuses its all-pairs gate's corpus count), so the
     recall row builds with a single gating pass instead of repeating
     the probe + count the public wrapper runs."""
-    cbase = (corpus.select(F.col(id_col).alias("id"),
-                           F.col(vec_col).alias("v"))
-                   .withColumn("nv", norm(F.col("v"))))
+    cbase = _vec_base(corpus, id_col, vec_col)
     bbase = (bench.select(F.col(id_col).alias("bench_id"),
                           F.col(vec_col).alias("vb"))
                   .withColumn("nb", norm(F.col("vb"))))
@@ -423,9 +507,7 @@ def _semantic_contamination_ungated(corpus: DataFrame, bench: DataFrame,
         # codebook — no n x n_cells exchange, no per-id window sort
         return (base.join(F.broadcast(packed))
                     .select(idc, vc, nc,
-                            (-_best_cell(vc, nc,
-                                         round_to)["negid"])
-                            .alias("cell_id")))
+                            _nearest_cell(round_to, vc, nc)))
 
     cidx = assign(cbase, "id", "v", "nv")
     bidx = assign(bbase, "bench_id", "vb", "nb")
@@ -463,9 +545,7 @@ def semantic_contamination_recall(corpus: DataFrame, bench: DataFrame,
     _check_bench_broadcast_cap(bench, "semantic_contamination_recall")
     if n_cells is None:
         n_cells = max(min_cells, n_corpus // target_cell_size)
-    cbase = (corpus.select(F.col(id_col).alias("id"),
-                           F.col(vec_col).alias("v"))
-                   .withColumn("nv", norm(F.col("v"))))
+    cbase = _vec_base(corpus, id_col, vec_col)
     bbase = (bench.select(F.col(id_col).alias("bench_id"),
                           F.col(vec_col).alias("vb"))
                   .withColumn("nb", norm(F.col("vb"))))
@@ -504,16 +584,13 @@ def ivf_assign(df: DataFrame, id_col: str, vec_col: str,
     with the same rounded-cosine rule as ivf_topk, so an appended
     index is bit-identical to one built from scratch over the union —
     the invariant the parity test pins."""
-    base = (df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
     # r10 (guide §2.4): map-side argmax over the one-row packed
     # codebook — no n x n_cells exchange, no per-id window sort
     # (ranks bit-identical, see _cell_prs; this is exactly the
     # certified ivf_assign_stream shape brought back to the batch op)
-    return (base.join(F.broadcast(_packed_cells(codebook)))
-                .select("id", "v", "nv",
-                        (-_best_cell("v", "nv",
-                                     round_to)["negid"]).alias("cell_id")))
+    return (_vec_base(df, id_col, vec_col)
+            .join(F.broadcast(_packed_cells(codebook)))
+            .select("id", "v", "nv", _nearest_cell(round_to)))
 
 
 def ivf_topk(df: DataFrame, id_col: str, vec_col: str, *,
@@ -553,32 +630,19 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, *,
     quotient is the same doubles in the same order as cosine(), so
     results are bit-identical.
     """
-    base = (df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
-    if coarse is not None:
-        # injected codebook — the sampled-training / frozen-index
-        # path: training cost decouples from the search corpus
-        cents = coarse.withColumn("ncv", norm(F.col("cv")))
-    elif train_iters > 0:
-        cents = (train_ivf_codebook(df, id_col, vec_col, n_cells=n_cells,
+    base = _vec_base(df, id_col, vec_col)
+    # an injected codebook is the sampled-training / frozen-index
+    # path: training cost decouples from the search corpus
+    if coarse is None and train_iters > 0:
+        coarse = train_ivf_codebook(df, id_col, vec_col, n_cells=n_cells,
                                     iters=train_iters, round_to=round_to)
-                 .withColumn("ncv", norm(F.col("cv"))))
-    else:
-        cents = (base.orderBy("id").limit(n_cells)
-                     .select(F.col("id").alias("cell_id"),
-                             F.col("v").alias("cv"),
-                             F.col("nv").alias("ncv")))
-    # r10 (guide §2.4): probe ranks run MAP-SIDE over the one-row
-    # packed codebook (sort_array desc == the window's ordering, see
-    # _cell_prs) — no n x n_cells exchange, no per-id window sort
-    ranked = (base.join(F.broadcast(_packed_cells(cents)))
-                  .select("id", "v", "nv",
-                          F.posexplode(_top_cells(
-                              "v", "nv",
-                              max(1, nprobe), round_to)).alias("pos", "s"))
-                  .select("id", "v", "nv",
-                          (-F.col("s.negid")).alias("cell_id"),
-                          (F.col("pos") + 1).alias("crank")))
+    elif coarse is None:
+        coarse = (base.orderBy("id").limit(n_cells)
+                      .select(F.col("id").alias("cell_id"),
+                              F.col("v").alias("cv"),
+                              F.col("nv").alias("ncv")))
+    ranked = _coarse_ranks(base, coarse, nprobe, round_to,
+                           carry=("v", "nv"))
     idx = (ranked.filter(F.col("crank") == 1)
                .select(F.col("id").alias("neighbor_id"),
                        F.col("v").alias("vb"), F.col("nv").alias("nb"),
@@ -597,11 +661,7 @@ def ivf_topk(df: DataFrame, id_col: str, vec_col: str, *,
                   .withColumn("cos_sim",
                               F.round(dot(F.col("va"), F.col("vb"))
                                       / (F.col("na") * F.col("nb")), round_to)))
-    w = Window.partitionBy("id").orderBy(F.col("cos_sim").desc(),
-                                         F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k)
-                 .select("id", "neighbor_id", "cos_sim", "rank"))
+    return rank_topk(pairs, "cos_sim", k, desc=True)
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -929,58 +989,63 @@ def ivfpq_index_entries(df: DataFrame, id_col: str, vec_col: str, *,
 
     r10 (guide §2.3/§2.4): cell AND codes are computed in ONE
     map-side pass over two one-row broadcasts (packed coarse cells +
-    packed PQ codebook) — the map-side _codes_sql argmin is the
-    residual path's certified encode shape (flat chain == l2sq's
-    fold, array_min struct == min(struct(d, cid))). The previous
-    shape ran pq_encode's n x m explode -> broadcast join scoring
-    n x m x k rows -> two aggregations -> an id-keyed join back to
-    the assignment — four exchanges of corpus-keyed rows that this
-    single projection replaces (values bit-identical; oracle
-    re-green)."""
+    packed PQ codebook) — see _ivfpq_entries."""
     d_dim = _probe_dim(df, vec_col, m, "ivfpq_index_entries",
                        empty_ok=True)
     if d_dim is None:
         # empty incremental batch (the documented append case): no
         # rows means no entries — emit the empty frame with the SAME
-        # schema the non-empty path produces (the projection below is
-        # built with a placeholder dim and never executes). ADVICE
-        # r10: _probe_dim's limit-1 job made this path crash instead
-        # of staying append-compatible.
+        # schema the non-empty path produces (the projection is built
+        # with a placeholder dim and never executes). ADVICE r10:
+        # _probe_dim's limit-1 job made this path crash instead of
+        # staying append-compatible.
         df, d_dim = df.limit(0), m
-    sub = d_dim // m
-    base = (df.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
-    # per-row dimension guard (ADVICE r10): the old pq_encode path
-    # ran _subvectors' assert_true on EVERY row; the probe checks
-    # only the first. A later row with a different dim would yield
-    # NULL l2sq terms and array_min's NULL-smallest struct ordering
-    # would silently emit an arbitrary code into the persisted
-    # index — fail loudly instead (assert_true folded into a used
-    # filter so Catalyst keeps it; == d_dim implies % m == 0 here
-    # since _probe_dim validated d_dim % m).
+    return _ivfpq_entries(_vec_base(df, id_col, vec_col),
+                          _packed_cells(coarse),
+                          _packed_pq_codebooks(codebooks), m, d_dim,
+                          round_to, "ivfpq_index_entries")
+
+
+def _ivfpq_entries(base: DataFrame, cells: DataFrame, pcb: DataFrame,
+                   m: int, d_dim: int, round_to: int,
+                   op: str) -> DataFrame:
+    """The IVF-PQ entry encoder for an (id, v, nv) frame at an
+    already-probed dimension d_dim: one projection over the packed
+    coarse cells (_packed_cells) and the packed PQ codebook
+    (_packed_pq_codebooks), which the caller builds so a search can
+    share its packed codebook with the query LUT. The map-side
+    _codes_sql argmin is the certified encode
+    (flat chain == l2sq's fold, array_min struct == min(struct(d,
+    cid))). The previous shape ran pq_encode's n x m explode ->
+    broadcast join scoring n x m x k rows -> two aggregations -> an
+    id-keyed join back to the assignment — four exchanges of
+    corpus-keyed rows that this single projection replaces (values
+    bit-identical; oracle re-green)."""
+    # per-row dimension guard (ADVICE r10): the probe checks only the
+    # first row. A later row with a different dim would yield NULL
+    # l2sq terms and array_min's NULL-smallest struct ordering would
+    # silently emit an arbitrary code into the persisted index — fail
+    # loudly instead (assert_true folded into a used filter so
+    # Catalyst keeps it; == d_dim implies % m == 0 since _probe_dim
+    # validated d_dim % m).
     base = base.filter(F.assert_true(
         F.size(F.col("v")) == d_dim,
-        F.concat(F.lit(f"ivfpq_index_entries: vector dim != probed "
-                       f"dim {d_dim}: "),
+        F.concat(F.lit(f"{op}: vector dim != probed dim {d_dim}: "),
                  F.size(F.col("v")).cast("string"))).isNull())
-    return (base.join(F.broadcast(_packed_cells(coarse)))
-                .join(F.broadcast(_packed_pq_codebooks(codebooks)))
+    return (base.join(F.broadcast(cells)).join(F.broadcast(pcb))
                 .select(F.col("id").alias("neighbor_id"),
-                        (-_best_cell("v", "nv",
-                                     round_to)["negid"]).alias("cell_id"),
-                        F.expr(_codes_sql("v", m, sub, round_to))
+                        _nearest_cell(round_to),
+                        F.expr(_codes_sql("v", m, d_dim // m, round_to))
                          .alias("codes")))
 
 
-def _adc_score(scored: DataFrame, m: int) -> DataFrame:
-    """Map-side ADC scoring of the packed inverted-list meet: score
-    each matched cell's entries INSIDE one transform() over the
-    packed entry array — per surviving entry, the exact-decimal sum
-    of its m LUT entries, UNROLLED over the m subspaces (m is a
-    plan-time int) — then explode only the slim (neighbor_id,
-    approx_dist) structs. The r8 shape folded with
-    aggregate(zip_with(...)) per candidate (two more interpreted
+def _adc_score(m: int) -> dict[str, str]:
+    """The PQ family's _ivf_meet score: per surviving entry, the
+    exact-decimal sum of its m LUT entries, UNROLLED over the m
+    subspaces (m is a plan-time int), computed INSIDE the meet's
+    transform over the packed entry array so only the slim
+    (neighbor_id, approx_dist) structs explode. The r8 shape folded
+    with aggregate(zip_with(...)) per candidate (two more interpreted
     lambda frames plus a per-step decimal cast); the unrolled sum is
     the same exact decimal arithmetic (decimal addition is exact and
     scale-6 is preserved, so association cannot change the value;
@@ -990,9 +1055,9 @@ def _adc_score(scored: DataFrame, m: int) -> DataFrame:
     first and scored in the (codegen'd) post-explode projection
     measured 35-40% SLOWER at sf0.1 — the generator then copies the
     row's m x k LUT array into every candidate row, and that
-    materialization dwarfs the interpreter savings. This transform
-    runs once per (query, probed cell) x entry — the hottest loop in
-    every IVF-PQ variant."""
+    materialization dwarfs the interpreter savings. This runs once
+    per (query, probed cell) x entry — the hottest loop in every
+    IVF-PQ variant."""
     # LUT entries arrive as scale-6 LONGS (micros): the exact
     # decimal(15,6) distances scaled by 10^6 at LUT-build time
     # (decimal multiply, exact). The < 2^53 exactness claim below
@@ -1010,16 +1075,7 @@ def _adc_score(scored: DataFrame, m: int) -> DataFrame:
     terms = " + ".join(
         f"element_at(element_at(lut, {j + 1}), "
         f"element_at(e.codes, {j + 1}) + 1)" for j in range(m))
-    hits = F.expr(
-        "transform(filter(entries, e -> e.neighbor_id != qid), "
-        "e -> named_struct('neighbor_id', e.neighbor_id, "
-        f"'approx_dist', CAST({terms} AS DOUBLE) / 1000000.0D))")
-    return (scored.select("qid", "probe_rank",
-                          F.explode(hits).alias("h"))
-                  .select("qid",
-                          F.col("h.neighbor_id").alias("neighbor_id"),
-                          F.col("h.approx_dist").alias("approx_dist"),
-                          "probe_rank"))
+    return {"approx_dist": f"CAST({terms} AS DOUBLE) / 1000000.0D"}
 
 
 def ivfpq_adc_pairs(df: DataFrame, id_col: str, vec_col: str, *,
@@ -1028,8 +1084,7 @@ def ivfpq_adc_pairs(df: DataFrame, id_col: str, vec_col: str, *,
                     coarse: DataFrame | None = None,
                     codebooks: DataFrame | None = None,
                     entries: DataFrame | None = None,
-                    broadcast_query_luts: bool = False,
-                    cell_salt: int = 16) -> DataFrame:
+                    broadcast_query_luts: bool = False) -> DataFrame:
     """Composed IVF-PQ candidate scoring — the FAISS IVF-PQ layout
     pq_adc_topk's docstring promises: a coarse IVF index restricts
     WHICH candidates a query meets, PQ-ADC scores HOW (Jegou et al.
@@ -1054,179 +1109,61 @@ def ivfpq_adc_pairs(df: DataFrame, id_col: str, vec_col: str, *,
     Scale shape (the reason this exists): pq_adc_topk's LUT join is
     all-pairs (n_q x n_d); here the probe->index equi-join on cell id
     restricts candidates to the nprobe probed cells FIRST, so ADC
-    work rides n_q x (nprobe/n_cells) x n_d — cells, not n^2. Each
-    (query, candidate) pair appears at most once because the index
-    side is single-assignment.
-
-    Every shuffle stays PAIR-level (slim (qid, neighbor, probe_rank)
-    rows): the m per-pair LUT entries are never exploded through a
-    join. Instead each neighbor carries its m codes as ONE ordered
-    array (groupBy pq_encode), each query carries its full m x k LUT
-    as ONE array-of-arrays (two-level groupBy of the per-centroid
-    distances), and the ADC sum is computed map-side with
-    zip_with + O(1) array element_at + an exact-decimal fold —
-    value-identical to the v1 exploded-join + SUM shape (verified
-    bit-exact) but 3x faster at sf0.1 (19.5 s -> 6.2 s frozen-
-    codebook search) because the explode-join shuffled pairs x m
-    rows through a sort-merge join with a LUT just past the
-    broadcast threshold.
+    work rides n_q x (nprobe/n_cells) x n_d — cells, not n^2. The
+    meet is the shared _ivf_meet: each neighbor's m codes ride as ONE
+    ordered array inside its cell's list, each query carries its full
+    m x k LUT as ONE array-of-arrays, and the ADC sum is computed
+    map-side per (query, probed cell) against the whole list (the
+    earlier per-pair join shape attached the LUT to every one of the
+    ~2M candidate rows — the measured 8-12 s was that
+    materialization, not the arithmetic).
     """
-    base = (df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
+    base = _vec_base(df, id_col, vec_col)
     if coarse is None:
         coarse = train_ivf_codebook(df, id_col, vec_col, n_cells=n_cells,
                                     iters=coarse_iters, round_to=round_to)
-    # r10 (guide §2.4): coarse ranks run MAP-SIDE over the one-row
-    # packed codebook (sort_array desc == the window's ordering, see
-    # _cell_prs) — no n x n_cells exchange, no per-id window sort
-    ranked = (base.join(F.broadcast(_packed_cells(coarse)))
-                  .select("id",
-                          F.posexplode(_top_cells(
-                              "v", "nv",
-                              max(1, nprobe), round_to)).alias("pos", "s"))
-                  .select("id", (-F.col("s.negid")).alias("cell_id"),
-                          (F.col("pos") + 1).alias("crank")))
-    probe = (ranked.filter(F.col("crank") <= nprobe)
-                   .select(F.col("id").alias("qid"),
-                           F.col("cell_id").alias("probe_cell"),
-                           F.col("crank").alias("probe_rank")))
+    probe = (_coarse_ranks(base, coarse, nprobe, round_to)
+             .filter(F.col("crank") <= nprobe)
+             .select(F.col("id").alias("qid"),
+                     F.col("cell_id").alias("probe_cell"),
+                     F.col("crank").alias("probe_rank")))
     pqcb = codebooks if codebooks is not None \
         else pq_codebooks(df, id_col, vec_col, m=m, k=k)
-    # r8: the per-query LUT builds MAP-SIDE — the m*k codebook packs
-    # into ONE broadcast row (cbm[j][c] = centroid c of subspace j)
-    # and each query row computes its m x k LUT in one HOF pass,
-    # replacing the explode(m) -> codebook join -> two
-    # collect_list/array_sort shuffles of n_q x m x k rows (same
-    # entries, same code-then-subspace ordering, bit-identical). The
-    # dim % m guard matches _subvectors' (assert_true folded into a
-    # used filter so Catalyst keeps it).
-    pqcb_p = _packed_pq_codebooks(pqcb)
-    sub_q_i = _probe_dim(df, vec_col, m, "ivfpq_adc_pairs") // m
+    pcb = _packed_pq_codebooks(pqcb)
+    d_dim = _probe_dim(df, vec_col, m, "ivfpq_adc_pairs")
     if entries is None:
-        # r10 (guide §2.3/§2.4): the index side's cell AND codes are
-        # ONE map-side pass over the two packed one-row broadcasts
-        # (the ivfpq_index_entries shape; argmax == the old ranked
-        # crank==1 by _cell_prs' ordering argument, _codes_sql ==
-        # pq_encode's argmin — bit-identical, oracle re-green). The
-        # previous shape ran pq_encode's explode -> broadcast join ->
-        # two aggregations -> an id-keyed join back to the crank==1
-        # assignment: four corpus-keyed exchanges that this single
-        # projection replaces.
-        # per-row dim guard on the INDEX side (the ivfpq_index_entries
-        # rule — _codes_sql at a probed dim would silently mis-encode
-        # a row whose true dim differs; == implies % m == 0 here)
-        ebase = base.filter(F.assert_true(
-            F.size(F.col("v")) == sub_q_i * m,
-            F.concat(F.lit(f"ivfpq_adc_pairs: vector dim != probed "
-                           f"dim {sub_q_i * m}: "),
-                     F.size(F.col("v")).cast("string"))).isNull())
-        entries = (ebase.join(F.broadcast(_packed_cells(coarse)))
-                        .join(F.broadcast(pqcb_p))
-                        .select(F.col("id").alias("neighbor_id"),
-                                (-_best_cell("v", "nv",
-                                             round_to)["negid"])
-                                .alias("cell_id"),
-                                F.expr(_codes_sql("v", m, sub_q_i,
-                                                  round_to))
-                                 .alias("codes")))
+        entries = _ivfpq_entries(base, _packed_cells(coarse), pcb, m,
+                                 d_dim, round_to, "ivfpq_adc_pairs")
     qc = F.col(vec_col)
     # == probed dim (not just % m): _lut_rows_sql unrolls element_at
     # terms at the probed dim, and a divisible-but-different query
     # dim would read out-of-bounds NULLs into the LUT silently
     qrows = (df.filter(F.assert_true(
-                 F.size(qc) == sub_q_i * m,
-                 F.concat(F.lit(f"vector dim != probed dim "
-                                f"{sub_q_i * m}: "),
+                 F.size(qc) == d_dim,
+                 F.concat(F.lit(f"vector dim != probed dim {d_dim}: "),
                           F.size(qc).cast("string"))).isNull())
                .select(F.col(id_col).alias("qid"), qc.alias("qv")))
-    # r10: the per-query LUT's centroid distances are UNROLLED flat
-    # expressions at a plan-time dimension (one bounded limit-1 probe
-    # job, the r6 cap-probe precedent) instead of sliced
-    # zip_with+aggregate folds — each entry is the plain
-    # left-associated 0.0 + (x-y)^2 + ... chain l2sq()'s sequential
-    # fold runs (identical IEEE add sequence, bit-identical values;
-    # oracle re-green), with no per-element lambda frames and no
-    # per-subspace slice allocation. The residual variant got the
-    # same treatment the same round. The tree arrives via ONE
-    # generated-SQL F.expr parse (_l2sq_flat_sql): the Column-built
-    # form spent 1.7 s of driver time per plan build in py4j calls —
-    # paid inside every timed bench execution.
-    lut_arr = F.expr(_lut_rows_sql("qv", m, sub_q_i, round_to))
-    lut_q = (qrows.join(F.broadcast(pqcb_p))
-                  .select("qid", lut_arr.alias("lut")))
-    # Index build: codes live IN the cell's INVERTED LIST — exactly
-    # the FAISS IVFPQ on-disk layout. One vector-keyed build-time
-    # join, then one groupBy(cell) packs each cell's (neighbor_id,
-    # codes) entries into a single list row. With n_cells ~ sqrt(n)
-    # a cell row stays bounded (~sqrt(n) entries x m bytes).
-    inv = (entries
-               .groupBy("cell_id")
-               .agg(F.collect_list(F.struct("neighbor_id", "codes"))
-                     .alias("entries")))
-    # ADC scoring is per (query, probed cell), NOT per (query,
-    # neighbor) pair: the query's m x k LUT is materialized once per
-    # probed cell (n_q x nprobe rows) and scored against the whole
-    # inverted list with a nested HOF; results explode to slim
-    # (qid, neighbor, dist) rows afterwards. The earlier per-pair
-    # join shape attached the 256-entry decimal LUT to every one of
-    # the ~2M candidate rows — the measured 8-12 s was that
-    # materialization, not the arithmetic.
-    #
+    # r8/r10: the per-query m x k LUT builds MAP-SIDE over the ONE-row
+    # packed codebook (cbm[j][c] = centroid c of subspace j), each
+    # entry the unrolled flat chain l2sq()'s sequential fold runs
+    # (bit-identical), generated as ONE SQL parse (_lut_rows_sql: the
+    # Column-built form spent 1.7 s of driver time per plan build)
+    lut_q = (qrows.join(F.broadcast(pcb))
+                  .select("qid",
+                          F.expr(_lut_rows_sql("qv", m, d_dim // m,
+                                               round_to)).alias("lut")))
     # Join shapes (the r5 verdict's 100x-killer, fixed): in the
-    # registered SELF-search form queries == corpus, so `inv` (every
-    # vector's m codes) and `lut_q` (one m x k LUT per query) are
-    # both O(n) — broadcasting either is a driver OOM at 100x. The
-    # default path therefore:
-    #   1. attaches the LUT by its qid EQUI-key first (shuffle hash
-    #      join on n_q keys; each probe row gains a constant m x k
-    #      decimal array, ~m*k*16 bytes, BEFORE meeting the index so
-    #      the packed cell lists are never re-shuffled post-join);
-    #   2. meets the inverted list on the cell-id equi-key as a
-    #      SHUFFLE_HASH join (hinted: no sort of the packed entry
-    #      arrays, and the static plan provably contains no
-    #      corpus-sized broadcast). AQE may still promote it to a
-    #      runtime broadcast when the built index is genuinely under
-    #      the adaptive threshold — that runtime size check IS the
-    #      gate, never a plan-time O(n) hint.
-    #   3. salts the cell key `cell_salt` ways (inv replicated per
-    #      salt — m-byte codes, cheap; probe rows take
-    #      pmod(xxhash64(qid))) so scoring parallelism is
-    #      n_cells * cell_salt tasks even when n_cells < cores; at
-    #      production n_cells ~ sqrt(n) the salt is a no-op cost-wise
-    #      but keeps hot probed cells from serializing on one task.
-    # broadcast_query_luts=True hints the LUT broadcast for the BOUNDED
-    # batch-query path (a handful of queries against a frozen index,
-    # where lut_q is genuinely query-batch-sized) — an explicit
-    # caller assertion, off for the registered self-search. The
-    # inverted list is corpus-sized in EVERY mode, so its meet is
-    # always the equi-join; with a tiny probe side Catalyst's own
-    # size estimate broadcasts the probe, not the index.
-    inv_s = inv.withColumn(
-        "isalt", F.explode(F.array(*[F.lit(r)
-                                     for r in range(cell_salt)])))
-    # the probe-side exchange is a USER-numbered hash repartition
-    # on the join keys: AQE's byte-based coalescing would see the
-    # slim pre-scoring rows, fold the exchange to a handful of
-    # partitions, and serialize the CPU-heavy ADC fold (bytes are
-    # a terrible proxy for HOF cost — measured 5x on sf0.1); a
-    # user-specified count is exempt from coalescing and already
-    # satisfies the join's clustering requirement, so no second
-    # exchange is inserted.
-    sc = df.sparkSession.sparkContext
+    # registered SELF-search form queries == corpus, so the inverted
+    # lists and lut_q are both O(n) — broadcasting either is a driver
+    # OOM at 100x. The LUT therefore attaches by its qid EQUI-key
+    # BEFORE the meet, so the packed lists are never re-shuffled
+    # post-join. broadcast_query_luts=True hints the LUT broadcast for
+    # the BOUNDED batch-query path (a handful of queries against a
+    # frozen index) — an explicit caller assertion, off for the
+    # registered self-search.
     lut_j = F.broadcast(lut_q) if broadcast_query_luts else lut_q
-    scored = (probe.join(lut_j, "qid")
-                   .withColumn("salt",
-                               F.pmod(F.xxhash64("qid"),
-                                      F.lit(cell_salt)).cast("int"))
-                   .repartition(sc.defaultParallelism,
-                                "probe_cell", "salt")
-                   .join(inv_s.hint("shuffle_hash"),
-                         (F.col("probe_cell") == F.col("cell_id"))
-                         & (F.col("salt") == F.col("isalt"))))
-    # unrolled exact-decimal sum over the m LUT entries — the same
-    # SUM(decimal) produced in the exploded shape (decimal add is
-    # exact, so association cannot diverge); see _adc_score
-    return _adc_score(scored, m)
+    return _ivf_meet(probe.join(lut_j, "qid"), entries, ("codes",),
+                     _adc_score(m), carry=("probe_rank",))
 
 
 def ivfpq_topk(df: DataFrame, id_col: str, vec_col: str, *,
@@ -1248,13 +1185,7 @@ def ivfpq_topk(df: DataFrame, id_col: str, vec_col: str, *,
                             coarse_iters=coarse_iters, round_to=round_to,
                             coarse=coarse, codebooks=codebooks,
                             broadcast_query_luts=broadcast_query_luts)
-    w = Window.partitionBy("qid").orderBy(F.col("approx_dist").asc(),
-                                          F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k_neighbors)
-                 .select(F.col("qid").alias("id"), "neighbor_id",
-                         "approx_dist",
-                         F.col("rank").cast("int").alias("rank")))
+    return rank_topk(pairs, "approx_dist", k_neighbors, key="qid")
 
 
 def pq_train_codebooks(df: DataFrame, id_col: str, vec_col: str, *,
@@ -1394,8 +1325,7 @@ def random_projection(df: DataFrame, id_col: str = "vec_id",
 def ivfpq_residual_pairs(df: DataFrame, id_col: str, vec_col: str, *,
                          n_cells: int = 8, nprobe: int = 4, m: int = 4,
                          k: int = 8, coarse_iters: int = 2,
-                         round_to: int = 6,
-                         cell_salt: int = 16) -> DataFrame:
+                         round_to: int = 6) -> DataFrame:
     """RESIDUAL IVF-PQ candidate scoring — the full FAISS IVFPQ
     encoding (Jegou et al. 2011 §V-A): PQ quantizes the RESIDUAL
     r = x - centroid(cell(x)) instead of x itself. Residuals
@@ -1415,59 +1345,38 @@ def ivfpq_residual_pairs(df: DataFrame, id_col: str, vec_col: str, *,
     are the k lowest-id INDEX residuals (the pq_codebooks seed rule
     lifted to residual space).
 
-    Scale shape: identical skeleton to ivfpq_adc_pairs — coarse
-    assignment is the broadcast n x n_cells pass, and the ADC meet is
-    the same packed inverted-list shape (r5 verdict item 2: the first
-    cut's (cell, subspace, code) exploded equi-join shuffled pairs x m
-    rows and was the catalog's slowest query at 31.9 s sf0.1): each
-    index vector's m residual codes ride as ONE ordered array inside
-    its cell's packed entry list, the query's LUT — here PER (query,
-    probed cell), because the query residual differs in every probed
-    cell — rides as ONE m x k array-of-arrays, and the salted
-    shuffle-hash cell equi-join + map-side decimal fold replace the
-    exploded join + SUM (value-identical: decimal addition is exact,
-    so fold order cannot diverge). Because the LUT is already
-    (qid, probe_cell)-keyed, no separate qid join is needed at all,
-    and nothing corpus-sized is ever broadcast.
+    Scale shape: the shared helpers of ivfpq_adc_pairs — _coarse_ranks
+    for the broadcast n x n_cells assignment, _ivf_meet with the PQ
+    _adc_score for the packed inverted-list meet (r5 verdict item 2:
+    the first cut's (cell, subspace, code) exploded equi-join shuffled
+    pairs x m rows and was the catalog's slowest query at 31.9 s
+    sf0.1). Because the LUT is already (qid, probe_cell)-keyed, no
+    separate qid join is needed at all, and nothing corpus-sized is
+    ever broadcast.
 
     r8: the encode and LUT builds are MAP-SIDE — the m*k residual
     codebook packs into ONE broadcast row (cbm[j][c] = centroid c of
     subspace j; m*k*(d/m) doubles — tiny at any corpus size) and each
     index/query row computes its m codes / m x k LUT in one HOF pass,
     replacing the r6 explode(m) -> codebook join -> two
-    collect_list/array_sort shuffles of candidates x m rows (the last
-    corpus-sized shuffles in the plan besides the ADC meet itself;
-    measured 12.5 -> ~9.5 s at sf0.1, values bit-identical). The
-    assignment table localCheckpoints once — it feeds the index
-    encode AND the probe side, and each reference otherwise re-runs
-    the corpus assignment window (at 100 TB this materialization IS
-    the IVF index build; a production deployment persists it to
-    storage rather than executor memory)."""
-    base = (df.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
+    collect_list/array_sort shuffles of candidates x m rows (measured
+    12.5 -> ~9.5 s at sf0.1, values bit-identical). The assignment
+    table localCheckpoints once — it feeds the index encode AND the
+    probe side, and each reference otherwise re-runs the corpus
+    assignment (at 100 TB this materialization IS the IVF index
+    build; a production deployment persists it to storage rather than
+    executor memory)."""
+    base = _vec_base(df, id_col, vec_col)
     coarse = train_ivf_codebook(df, id_col, vec_col, n_cells=n_cells,
                                 iters=coarse_iters, round_to=round_to)
-    # r10 (guide §2.4): coarse ranks run MAP-SIDE over the one-row
-    # packed codebook (sort_array desc == the window's ordering, see
-    # _cell_prs; with_cv carries each probed cell's centroid so the
-    # residual subtracts post-explode) — no n x n_cells exchange, no
-    # per-id window sort. The residual is subtracted BEFORE the
-    # checkpoint, so the materialized table carries ONE d-vector per
-    # row (rv); ranks beyond nprobe feed nothing, so the table keeps
-    # n x nprobe rows only.
-    resid = F.zip_with("v", F.col("s.ccv"),
-                       lambda a, b: a.cast("double") - b)
-    ranked = (base.join(F.broadcast(_packed_cells(coarse)))
-                  .select("id", "v",
-                          F.posexplode(_top_cells(
-                              "v", "nv",
-                              max(1, nprobe), round_to,
-                              with_cv=True)).alias("pos", "s"))
-                  .select("id", (-F.col("s.negid")).alias("cell_id"),
-                          (F.col("pos") + 1).alias("crank"),
-                          resid.alias("rv"))
-                  .localCheckpoint())
+    # the residual is subtracted BEFORE the checkpoint, so the
+    # materialized table carries ONE d-vector per row (rv); ranks
+    # beyond nprobe feed nothing, so it keeps n x nprobe rows only
+    resid = F.zip_with("v", "ccv", lambda a, b: a.cast("double") - b)
+    ranked = (_coarse_ranks(base, coarse, nprobe, round_to,
+                            carry=("v",), with_cv=True)
+              .select("id", "cell_id", "crank", resid.alias("rv"))
+              .localCheckpoint())
 
     r_idx = (ranked.filter(F.col("crank") == 1)
                    .select(F.col("id").alias("neighbor_id"), "cell_id",
@@ -1490,38 +1399,18 @@ def ivfpq_residual_pairs(df: DataFrame, id_col: str, vec_col: str, *,
     rcb_p = _packed_pq_codebooks(rcb)
 
     # r10 (VERDICT r9 item 5): the codes/LUT centroid distances are
-    # UNROLLED flat expressions at a PLAN-TIME dimension instead of
-    # sliced zip_with+aggregate HOF folds. One bounded build-time
-    # probe (limit-1 job, the r6 cap-probe precedent) pins d; each
-    # per-centroid distance is then a plain left-associated
-    # 0.0 + (x-y)^2 + ... chain over element_at reads of the
-    # CHECKPOINTED rv — the identical IEEE add sequence l2sq()'s
-    # sequential fold runs (bit-identical values; oracle re-green at
-    # both fixture scales), with zero per-element lambda frames, no
-    # per-subspace slice allocation, and no bind_once machinery.
-    # Same element-count lesson as the r9 ADC-meet unroll, applied
-    # to the m*k-per-row LUT/encode stage the r8 note named.
-    d_dim = int(df.select(F.size(F.col(vec_col)).alias("d"))
-                  .first()["d"])
-    if d_dim % m:
-        raise ValueError(
-            f"ivfpq_residual_pairs: dim {d_dim} not divisible by "
-            f"m={m} (the _subvectors contract)")
-    sub_i = d_dim // m
-
-    # codes/LUT trees arrive via ONE generated-SQL F.expr parse each
-    # (_codes_sql/_lut_rows_sql — same parsed ops in the same order,
-    # bit-identical values): the Column-built unrolls spent ~3.5 s of
-    # driver py4j time per plan build here (two m x k x sub sites),
-    # inside every timed bench execution.
+    # UNROLLED flat expressions at a PLAN-TIME dimension (one bounded
+    # limit-1 probe job, the r6 cap-probe precedent) — the identical
+    # IEEE add sequence l2sq()'s fold runs, with zero per-element
+    # lambda frames. The trees arrive via ONE generated-SQL F.expr
+    # parse each (_codes_sql/_lut_rows_sql): the Column-built unrolls
+    # spent ~3.5 s of driver py4j time per plan build here.
+    sub_i = _probe_dim(df, vec_col, m, "ivfpq_residual_pairs") // m
     enc_codes = (r_idx.join(F.broadcast(rcb_p))
                       .select("neighbor_id", "cell_id",
                               F.expr(_codes_sql("rv", m, sub_i,
                                                 round_to))
                                .alias("codes")))
-    inv = (enc_codes.groupBy("cell_id")
-                    .agg(F.collect_list(F.struct("neighbor_id", "codes"))
-                          .alias("entries")))
     r_q = (ranked.filter(F.col("crank") <= nprobe)
                  .select(F.col("id").alias("qid"),
                          F.col("cell_id").alias("probe_cell"),
@@ -1532,19 +1421,8 @@ def ivfpq_residual_pairs(df: DataFrame, id_col: str, vec_col: str, *,
                          F.expr(_lut_rows_sql("rv", m, sub_i,
                                               round_to))
                           .alias("lut")))
-    inv_s = inv.withColumn(
-        "isalt", F.explode(F.array(*[F.lit(r)
-                                     for r in range(cell_salt)])))
-    sc = df.sparkSession.sparkContext
-    scored = (lut_pc.withColumn("salt",
-                                F.pmod(F.xxhash64("qid"),
-                                       F.lit(cell_salt)).cast("int"))
-                    .repartition(sc.defaultParallelism,
-                                 "probe_cell", "salt")
-                    .join(inv_s.hint("shuffle_hash"),
-                          (F.col("probe_cell") == F.col("cell_id"))
-                          & (F.col("salt") == F.col("isalt"))))
-    return _adc_score(scored, m)
+    return _ivf_meet(lut_pc, enc_codes, ("codes",), _adc_score(m),
+                     carry=("probe_rank",))
 
 
 def ivfpq_residual_topk(df: DataFrame, id_col: str, vec_col: str, *,
@@ -1559,13 +1437,7 @@ def ivfpq_residual_topk(df: DataFrame, id_col: str, vec_col: str, *,
                                  nprobe=nprobe, m=m, k=k,
                                  coarse_iters=coarse_iters,
                                  round_to=round_to)
-    w = Window.partitionBy("qid").orderBy(F.col("approx_dist").asc(),
-                                          F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k_neighbors)
-                 .select(F.col("qid").alias("id"), "neighbor_id",
-                         "approx_dist",
-                         F.col("rank").cast("int").alias("rank")))
+    return rank_topk(pairs, "approx_dist", k_neighbors, key="qid")
 
 
 # ------------------------------------------------------------- int8 SQ
@@ -1611,49 +1483,54 @@ def int8_quantize(df: DataFrame, id_col: str, vec_col: str, *,
               .select("id", F.col("dim").cast("int"), "q", "scale_r"))
 
 
-def int8_topk(df: DataFrame, id_col: str, vec_col: str, *,
-              k_neighbors: int = 5, round_to: int = 6) -> DataFrame:
-    """Top-k by QUANTIZED cosine: integer dot product of the int8
-    codes (exact int64 arithmetic — no FP in the pair loop), scaled
-    back by (scale_a * scale_b / 127^2) and normalized by the exact
-    original norms. All-pairs BY ROLE, like ann_brute_force_topk /
-    ann_pq_topk: this is the quantization-loss baseline the recall
-    query measures; the production path composes the same codes with
-    the IVF cell restriction (ivfsq_topk). Refuses inputs over
-    ALL_PAIRS_BASELINE_CAP rows."""
-    _gate_all_pairs_baseline(df, "int8_topk", "ivfsq_topk")
-    base = (df.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
+def _int8_enc(base: DataFrame) -> DataFrame:
+    """base plus (mx, qv) int8 codes for its (v) column —
+    int8_quantize's arithmetic in packed-array form (the shape the
+    all-pairs baseline, the inverted-list entries and the query side
+    of the IVF-SQ8 meet all carry)."""
     mx = F.aggregate(F.col("v"), F.lit(0.0),
-                     lambda acc, v: F.greatest(acc,
-                                               F.abs(v.cast("double"))))
+                     lambda acc, x: F.greatest(acc,
+                                               F.abs(x.cast("double"))))
     qv = F.transform(
-        F.col("v"), lambda v: F.when(F.col("mx") == 0.0, F.lit(0))
-                               .otherwise(F.round(v.cast("double")
+        F.col("v"), lambda x: F.when(F.col("mx") == 0.0, F.lit(0))
+                               .otherwise(F.round(x.cast("double")
                                                   * 127.0 / F.col("mx"))
                                            .cast("long")))
-    enc = (base.withColumn("mx", mx)
-               .select("id", "nv", "mx", qv.alias("qv")))
+    return base.withColumn("mx", mx).withColumn("qv", qv)
+
+
+def _int8_cos_sql(b: str, round_to: int) -> str:
+    """Quantized cosine of the query codes (qa, ma, na) against the
+    neighbor codes `b`.qb / .mb / .nb (a struct name, or "" for plain
+    columns) as generated SQL: the integer dot product of the int8
+    codes (exact int64 arithmetic — no FP in the pair loop), scaled
+    back by (ma * mb / 127^2) and normalized by the exact original
+    norms."""
+    p = f"{b}." if b else ""
+    return (f"ROUND(CAST(aggregate(zip_with(qa, {p}qb, (x, y) -> x * y), "
+            f"CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE) "
+            f"* ma * {p}mb / 16129.0D / (na * {p}nb), {round_to})")
+
+
+def int8_topk(df: DataFrame, id_col: str, vec_col: str, *,
+              k_neighbors: int = 5, round_to: int = 6) -> DataFrame:
+    """Top-k by QUANTIZED cosine (_int8_cos_sql) of the int8 codes.
+    All-pairs BY ROLE, like ann_brute_force_topk / ann_pq_topk: this
+    is the quantization-loss baseline the recall query measures; the
+    production path composes the same codes with the IVF cell
+    restriction (ivfsq_topk). Refuses inputs over
+    ALL_PAIRS_BASELINE_CAP rows."""
+    _gate_all_pairs_baseline(df, "int8_topk", "ivfsq_topk")
+    enc = _int8_enc(_vec_base(df, id_col, vec_col))
     a = spread_for_compute(
         enc.select(F.col("id"), F.col("qv").alias("qa"),
                    F.col("mx").alias("ma"), F.col("nv").alias("na")))
     b = enc.select(F.col("id").alias("neighbor_id"),
                    F.col("qv").alias("qb"), F.col("mx").alias("mb"),
                    F.col("nv").alias("nb"))
-    idot = F.aggregate(F.zip_with("qa", "qb", lambda x, y: x * y),
-                       F.lit(0).cast("long"), lambda acc, v: acc + v)
-    cos_q = F.round(idot.cast("double") * F.col("ma") * F.col("mb")
-                    / (127.0 * 127.0) / (F.col("na") * F.col("nb")),
-                    round_to)
     pairs = (a.join(F.broadcast(b), F.col("id") != F.col("neighbor_id"))
-              .withColumn("cos_q", cos_q))
-    w = Window.partitionBy("id").orderBy(F.col("cos_q").desc(),
-                                         F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k_neighbors)
-                 .select("id", "neighbor_id", "cos_q",
-                         F.col("rank").cast("int").alias("rank")))
+              .withColumn("cos_q", F.expr(_int8_cos_sql("", round_to))))
+    return rank_topk(pairs, "cos_q", k_neighbors, desc=True)
 
 
 # ------------------------------------------------------------ binary BQ
@@ -1691,10 +1568,11 @@ def sign_bit_array(vec) -> Column:
                                        .otherwise(F.lit(0)))
 
 
-def _hamming_arr(a, b) -> Column:
-    """Hamming distance between two equal-length bit arrays."""
-    return F.size(F.filter(
-        F.zip_with(a, b, lambda x, y: x != y), lambda v: v))
+def _hamming_sql(a: str, b: str) -> str:
+    """Hamming distance between two equal-length bit arrays, as
+    generated SQL (an INT)."""
+    return (f"CAST(size(filter(zip_with({a}, {b}, (x, y) -> x != y), "
+            f"d -> d)) AS INT)")
 
 
 def binary_topk(df: DataFrame, id_col: str, vec_col: str, *,
@@ -1714,15 +1592,8 @@ def binary_topk(df: DataFrame, id_col: str, vec_col: str, *,
     b = enc.select(F.col("id").alias("neighbor_id"),
                    F.col("bits").alias("bb"))
     pairs = (a.join(F.broadcast(b), F.col("id") != F.col("neighbor_id"))
-              .withColumn("hamming",
-                          _hamming_arr(F.col("ba"), F.col("bb"))
-                          .cast("int")))
-    w = Window.partitionBy("id").orderBy(F.col("hamming").asc(),
-                                         F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k_neighbors)
-                 .select("id", "neighbor_id", "hamming",
-                         F.col("rank").cast("int").alias("rank")))
+              .withColumn("hamming", F.expr(_hamming_sql("ba", "bb"))))
+    return rank_topk(pairs, "hamming", k_neighbors)
 
 
 def ivfbq_index_entries(df: DataFrame, id_col: str, vec_col: str, *,
@@ -1730,132 +1601,53 @@ def ivfbq_index_entries(df: DataFrame, id_col: str, vec_col: str, *,
                         round_to: int = 6) -> DataFrame:
     """Inverted-list ENTRIES (neighbor_id, cell_id, bb) for df's
     vectors under a FROZEN coarse codebook — the IVF-BQ append path
-    (the ivfsq_index_entries contract with sign-bit codes): one
-    broadcast coarse assignment + one map-side binary encode, linear
-    in the batch."""
-    base = (df.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
-    # r10 (guide §2.4): map-side argmax over the one-row packed
-    # codebook — no n x n_cells exchange, no per-id window sort
-    idxc = (base.join(F.broadcast(_packed_cells(coarse)))
-                .select(F.col("id").alias("neighbor_id"),
-                        (-_best_cell("v", "nv",
-                                     round_to)["negid"]).alias("cell_id")))
-    return idxc.join(
-        df.select(F.col(id_col).alias("neighbor_id"),
-                  sign_bit_array(F.col(vec_col)).alias("bb")),
-        "neighbor_id")
+    (the ivfsq_index_entries contract with sign-bit codes): cell and
+    sign bits in ONE map-side projection over the packed coarse
+    broadcast, linear in the batch, exactly one entry per input row."""
+    return (_vec_base(df, id_col, vec_col)
+            .join(F.broadcast(_packed_cells(coarse)))
+            .select(F.col("id").alias("neighbor_id"),
+                    _nearest_cell(round_to),
+                    sign_bit_array(F.col("v")).alias("bb")))
 
 
 def ivfbq_topk(df: DataFrame, id_col: str, vec_col: str, *,
                k_neighbors: int = 5, n_cells: int = 8, nprobe: int = 4,
                coarse_iters: int = 2, round_to: int = 6,
                coarse: DataFrame | None = None,
-               entries: DataFrame | None = None,
-               broadcast_queries: bool = False,
-               cell_salt: int = 16) -> DataFrame:
+               entries: DataFrame | None = None) -> DataFrame:
     """IVF + binary quantization — the fourth family completing the
     quantized-search matrix (FAISS IndexBinaryIVF's composition
     shape): the coarse IVF cells restrict WHICH candidates a query
-    meets (the certified ivfpq/ivfsq meet verbatim), sign-bit hamming
-    scores HOW. Returns (id, neighbor_id, hamming, rank), rank by
-    (hamming, neighbor_id). `coarse`/`entries` inject a frozen
-    codebook / pre-built inverted lists (the incremental path);
-    broadcast_queries hints broadcasting the encoded query batch for
-    the BOUNDED serving case only — the inverted-list meet stays the
-    salted equi-join in every mode.
+    meets (the shared _ivf_meet), sign-bit hamming scores HOW.
+    Returns (id, neighbor_id, hamming, rank), rank by (hamming,
+    neighbor_id). `coarse`/`entries` inject a frozen codebook /
+    pre-built inverted lists (the incremental path; df then supplies
+    only the QUERY vectors).
 
-    Scale shape: identical to the certified IVF-SQ8 meet — each
-    cell's (neighbor, bits) entries pack into one inverted-list row
-    (1 bit/dim: the lightest index of the four families); the meet is
-    the salted SHUFFLE_HASH cell equi-join behind a user-numbered
-    keyed repartition; scoring is a map-side zip_with/filter count;
-    nothing corpus-sized broadcast."""
-    base = (df.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
+    Scale shape: each cell's (neighbor, bits) entries pack into one
+    inverted-list row (1 bit/dim: the lightest index of the four
+    families); each probe row carries its query's bits from the
+    coarse-rank pass (no query-side join); the meet is _ivf_meet's
+    salted SHUFFLE_HASH cell equi-join; scoring is a map-side
+    zip_with/filter count; nothing corpus-sized broadcast."""
     if coarse is None:
         coarse = train_ivf_codebook(df, id_col, vec_col,
                                     n_cells=n_cells,
                                     iters=coarse_iters,
                                     round_to=round_to)
-    # r10 (guide §2.4): coarse ranks run MAP-SIDE over the one-row
-    # packed codebook — no n x n_cells exchange, no per-id window
-    ranked = (base.join(F.broadcast(_packed_cells(coarse)))
-                  .select("id",
-                          F.posexplode(_top_cells(
-                              "v", "nv",
-                              max(1, nprobe), round_to)).alias("pos", "s"))
-                  .select("id", (-F.col("s.negid")).alias("cell_id"),
-                          (F.col("pos") + 1).alias("crank")))
-    enc = df.select(F.col(id_col).alias("id"),
-                    sign_bit_array(F.col(vec_col)).alias("bits"))
     if entries is None:
-        idxc = (ranked.filter(F.col("crank") == 1)
-                      .select(F.col("id").alias("neighbor_id"),
-                              "cell_id"))
-        entries = idxc.join(
-            enc.select(F.col("id").alias("neighbor_id"),
-                       F.col("bits").alias("bb")), "neighbor_id")
-    inv = (entries.groupBy("cell_id")
-                  .agg(F.collect_list(F.struct("neighbor_id", "bb"))
-                        .alias("entries")))
-    inv_s = inv.withColumn(
-        "isalt", F.explode(F.array(*[F.lit(r)
-                                     for r in range(cell_salt)])))
-    # broadcast_queries hints the query-side code attach for the
-    # BOUNDED batch path only (the ivfsq_pairs gate, same contract)
-    enc_q = enc.select(F.col("id").alias("qid"),
-                       F.col("bits").alias("ba"))
-    enc_j = F.broadcast(enc_q) if broadcast_queries else enc_q
-    probe = (ranked.filter(F.col("crank") <= nprobe)
-                   .select(F.col("id").alias("qid"),
-                           F.col("cell_id").alias("probe_cell"))
-                   .join(enc_j, "qid"))
-    sc = df.sparkSession.sparkContext
-    scored = (probe.withColumn("salt",
-                               F.pmod(F.xxhash64("qid"),
-                                      F.lit(cell_salt)).cast("int"))
-                   .repartition(sc.defaultParallelism,
-                                "probe_cell", "salt")
-                   .join(inv_s.hint("shuffle_hash"),
-                         (F.col("probe_cell") == F.col("cell_id"))
-                         & (F.col("salt") == F.col("isalt"))))
-    hits = F.transform(
-        F.filter("entries", lambda e: e["neighbor_id"] != F.col("qid")),
-        lambda e: F.struct(
-            e["neighbor_id"].alias("neighbor_id"),
-            _hamming_arr(F.col("ba"), e["bb"]).cast("int")
-             .alias("hamming")))
-    pairs = (scored.select("qid", F.explode(hits).alias("h"))
-                   .select("qid",
-                           F.col("h.neighbor_id").alias("neighbor_id"),
-                           F.col("h.hamming").alias("hamming")))
-    w = Window.partitionBy("qid").orderBy(F.col("hamming").asc(),
-                                          F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k_neighbors)
-                 .select(F.col("qid").alias("id"), "neighbor_id",
-                         "hamming",
-                         F.col("rank").cast("int").alias("rank")))
-
-
-def _int8_enc(base: DataFrame) -> DataFrame:
-    """(id, nv, mx, qv) int8 codes for a (id, v, nv) frame —
-    int8_quantize's arithmetic in packed-array form (the shape both
-    the inverted-list entries and the query side of the IVF-SQ8 meet
-    carry)."""
-    mx = F.aggregate(F.col("v"), F.lit(0.0),
-                     lambda acc, x: F.greatest(acc,
-                                               F.abs(x.cast("double"))))
-    qv = F.transform(
-        F.col("v"), lambda x: F.when(F.col("mx") == 0.0, F.lit(0))
-                               .otherwise(F.round(x.cast("double")
-                                                  * 127.0 / F.col("mx"))
-                                           .cast("long")))
-    return (base.withColumn("mx", mx)
-                .select("id", "nv", "mx", qv.alias("qv")))
+        entries = ivfbq_index_entries(df, id_col, vec_col, coarse=coarse,
+                                      round_to=round_to)
+    base = (_vec_base(df, id_col, vec_col)
+            .withColumn("ba", sign_bit_array(F.col("v"))))
+    probe = (_coarse_ranks(base, coarse, nprobe, round_to, carry=("ba",))
+             .filter(F.col("crank") <= nprobe)
+             .select(F.col("id").alias("qid"),
+                     F.col("cell_id").alias("probe_cell"), "ba"))
+    pairs = _ivf_meet(probe, entries, ("bb",),
+                      {"hamming": _hamming_sql("ba", "e.bb")})
+    return rank_topk(pairs, "hamming", k_neighbors, key="qid")
 
 
 def ivfsq_index_entries(df: DataFrame, id_col: str, vec_col: str, *,
@@ -1863,138 +1655,68 @@ def ivfsq_index_entries(df: DataFrame, id_col: str, vec_col: str, *,
                         round_to: int = 6) -> DataFrame:
     """Inverted-list ENTRIES (neighbor_id, cell_id, qb, mb, nb) for
     df's vectors under a FROZEN coarse codebook — the append path of
-    the IVF-SQ8 index, mirroring ivfpq_index_entries: inserting a
-    batch is one broadcast coarse-assignment pass plus one map-side
-    int8 encode, both linear in the batch, no base re-scan. Feeding
-    the union to ivfsq_pairs(entries=...) searches the appended
-    index; the ann_ivfsq_index_probe oracle proves append ==
-    rebuild. The per-vector scale (mb) and exact norm (nb) travel
-    with the codes, so a frozen trained range cannot drift as the
-    index grows."""
-    base = (df.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
-    # r10 (guide §2.4): map-side argmax over the one-row packed
-    # codebook — no n x n_cells exchange, no per-id window sort
-    idxc = (base.join(F.broadcast(_packed_cells(coarse)))
-                .select(F.col("id").alias("neighbor_id"),
-                        (-_best_cell("v", "nv",
-                                     round_to)["negid"]).alias("cell_id")))
-    enc = _int8_enc(base)
-    return idxc.join(
-        enc.select(F.col("id").alias("neighbor_id"),
-                   F.col("qv").alias("qb"), F.col("mx").alias("mb"),
-                   F.col("nv").alias("nb")), "neighbor_id")
+    the IVF-SQ8 index, mirroring ivfpq_index_entries: cell and int8
+    codes in ONE map-side projection over the packed coarse
+    broadcast, linear in the batch, no base re-scan, exactly one entry
+    per input row. Feeding the union to ivfsq_pairs(entries=...)
+    searches the appended index; the ann_ivfsq_index_probe oracle
+    proves append == rebuild. The per-vector scale (mb) and exact
+    norm (nb) travel with the codes, so a frozen trained range cannot
+    drift as the index grows."""
+    return (_int8_enc(_vec_base(df, id_col, vec_col))
+            .join(F.broadcast(_packed_cells(coarse)))
+            .select(F.col("id").alias("neighbor_id"),
+                    _nearest_cell(round_to),
+                    F.col("qv").alias("qb"), F.col("mx").alias("mb"),
+                    F.col("nv").alias("nb")))
 
 
 def ivfsq_pairs(df: DataFrame, id_col: str, vec_col: str, *,
                 n_cells: int = 8, nprobe: int = 4,
                 coarse_iters: int = 2, round_to: int = 6,
                 coarse: DataFrame | None = None,
-                entries: DataFrame | None = None,
-                broadcast_queries: bool = False,
-                cell_salt: int = 16) -> DataFrame:
+                entries: DataFrame | None = None) -> DataFrame:
     """IVF-SQ8 candidate scoring: coarse IVF cells restrict WHICH
-    candidates a query meets (exactly the ivfpq_adc_pairs meet), int8
-    integer dot products score HOW (exactly int8_topk's arithmetic).
-    Returns (qid, neighbor_id, cos_q) pair rows.
+    candidates a query meets (the shared _ivf_meet), int8 integer
+    dot products score HOW (int8_topk's _int8_cos_sql). Returns
+    (qid, neighbor_id, cos_q) pair rows.
 
     `coarse` injects a frozen coarse codebook; `entries` injects
     pre-built inverted-list entries (ivfsq_index_entries' shape) —
     the incremental path, where df then supplies only the QUERY
-    vectors. broadcast_queries hints broadcasting the encoded query
-    batch for the BOUNDED serving case only (a handful of queries
-    against a frozen index); it is never the index side — the
-    inverted list is corpus-sized in every mode, so its meet is
-    always the salted equi-join.
+    vectors.
 
-    Scale shape: identical to the certified IVF-PQ meet — each cell's
-    (neighbor, codes, scale, norm) entries pack into one inverted-list
-    row; the query side carries its own constant-size code array; the
-    meet is the salted SHUFFLE_HASH cell equi-join with a
-    user-numbered keyed repartition (AQE byte-coalescing would
-    serialize the integer-fold scoring); nothing corpus-sized is ever
-    broadcast; the per-pair dot is exact int64 arithmetic."""
-    base = (df.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("v"))
-              .withColumn("nv", norm(F.col("v"))))
+    Scale shape: each cell's (neighbor, codes, scale, norm) entries
+    pack into one inverted-list row; each probe row carries its
+    query's constant-size codes from the coarse-rank pass (no
+    query-side join); the meet is _ivf_meet's salted SHUFFLE_HASH
+    cell equi-join; nothing corpus-sized is ever broadcast; the
+    per-pair dot is exact int64 arithmetic."""
     if coarse is None:
         coarse = train_ivf_codebook(df, id_col, vec_col,
                                     n_cells=n_cells,
                                     iters=coarse_iters,
                                     round_to=round_to)
-    # r10 (guide §2.4): coarse ranks run MAP-SIDE over the one-row
-    # packed codebook — no n x n_cells exchange, no per-id window
-    ranked = (base.join(F.broadcast(_packed_cells(coarse)))
-                  .select("id",
-                          F.posexplode(_top_cells(
-                              "v", "nv",
-                              max(1, nprobe), round_to)).alias("pos", "s"))
-                  .select("id", (-F.col("s.negid")).alias("cell_id"),
-                          (F.col("pos") + 1).alias("crank")))
-    enc = _int8_enc(base)
     if entries is None:
-        idxc = (ranked.filter(F.col("crank") == 1)
-                      .select(F.col("id").alias("neighbor_id"),
-                              "cell_id"))
-        entries = idxc.join(
-            enc.select(F.col("id").alias("neighbor_id"),
-                       F.col("qv").alias("qb"), F.col("mx").alias("mb"),
-                       F.col("nv").alias("nb")), "neighbor_id")
-    inv = (entries.groupBy("cell_id")
-                  .agg(F.collect_list(
-                       F.struct("neighbor_id", "qb", "mb", "nb"))
-                        .alias("entries")))
-    inv_s = inv.withColumn(
-        "isalt", F.explode(F.array(*[F.lit(r)
-                                     for r in range(cell_salt)])))
-    # broadcast_queries hints the query-side code attach (the SQ8
-    # analogue of ivfpq's gated LUT broadcast) for the BOUNDED batch
-    # path only; the inverted-list meet below stays the salted
-    # shuffle-hash equi-join in every mode.
-    enc_q = enc.select(F.col("id").alias("qid"),
-                       F.col("qv").alias("qa"),
-                       F.col("mx").alias("ma"),
-                       F.col("nv").alias("na"))
-    enc_j = F.broadcast(enc_q) if broadcast_queries else enc_q
-    probe = (ranked.filter(F.col("crank") <= nprobe)
-                   .select(F.col("id").alias("qid"),
-                           F.col("cell_id").alias("probe_cell"))
-                   .join(enc_j, "qid"))
-    sc = df.sparkSession.sparkContext
-    scored = (probe.withColumn("salt",
-                               F.pmod(F.xxhash64("qid"),
-                                      F.lit(cell_salt)).cast("int"))
-                   .repartition(sc.defaultParallelism,
-                                "probe_cell", "salt")
-                   .join(inv_s.hint("shuffle_hash"),
-                         (F.col("probe_cell") == F.col("cell_id"))
-                         & (F.col("salt") == F.col("isalt"))))
-    hits = F.transform(
-        F.filter("entries", lambda e: e["neighbor_id"] != F.col("qid")),
-        lambda e: F.struct(
-            e["neighbor_id"].alias("neighbor_id"),
-            F.round(F.aggregate(
-                        F.zip_with(F.col("qa"), e["qb"],
-                                   lambda x, y: x * y),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x).cast("double")
-                    * F.col("ma") * e["mb"] / (127.0 * 127.0)
-                    / (F.col("na") * e["nb"]), round_to)
-             .alias("cos_q")))
-    return (scored.select("qid", F.explode(hits).alias("h"))
-                  .select("qid",
-                          F.col("h.neighbor_id").alias("neighbor_id"),
-                          F.col("h.cos_q").alias("cos_q")))
+        entries = ivfsq_index_entries(df, id_col, vec_col, coarse=coarse,
+                                      round_to=round_to)
+    probe = (_coarse_ranks(_int8_enc(_vec_base(df, id_col, vec_col)),
+                           coarse, nprobe, round_to,
+                           carry=("qv", "mx", "nv"))
+             .filter(F.col("crank") <= nprobe)
+             .select(F.col("id").alias("qid"),
+                     F.col("cell_id").alias("probe_cell"),
+                     F.col("qv").alias("qa"), F.col("mx").alias("ma"),
+                     F.col("nv").alias("na")))
+    return _ivf_meet(probe, entries, ("qb", "mb", "nb"),
+                     {"cos_q": _int8_cos_sql("e", round_to)})
 
 
 def ivfsq_topk(df: DataFrame, id_col: str, vec_col: str, *,
                k_neighbors: int = 5, n_cells: int = 8, nprobe: int = 4,
                coarse_iters: int = 2, round_to: int = 6,
                coarse: DataFrame | None = None,
-               entries: DataFrame | None = None,
-               broadcast_queries: bool = False,
-               cell_salt: int = 16) -> DataFrame:
+               entries: DataFrame | None = None) -> DataFrame:
     """IVF + int8 scalar quantization — the FAISS
     IndexIVFScalarQuantizer composition shape (with the per-vector
     symmetric range scheme noted in the section header, not FAISS's
@@ -2002,22 +1724,13 @@ def ivfsq_topk(df: DataFrame, id_col: str, vec_col: str, *,
     (cos_q desc, neighbor_id) — the production composition
     int8_topk's docstring promises, completing the quantized-search
     matrix (IVF-flat / IVF-PQ / IVF-SQ8). Returns (id, neighbor_id,
-    cos_q, rank). coarse/entries/broadcast_queries pass through to
-    ivfsq_pairs for the incremental and bounded-batch serving
-    shapes."""
+    cos_q, rank). coarse/entries pass through to ivfsq_pairs for the
+    incremental and bounded-batch serving shapes."""
     pairs = ivfsq_pairs(df, id_col, vec_col, n_cells=n_cells,
                         nprobe=nprobe, coarse_iters=coarse_iters,
                         round_to=round_to, coarse=coarse,
-                        entries=entries,
-                        broadcast_queries=broadcast_queries,
-                        cell_salt=cell_salt)
-    w = Window.partitionBy("qid").orderBy(F.col("cos_q").desc(),
-                                          F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k_neighbors)
-                 .select(F.col("qid").alias("id"), "neighbor_id",
-                         "cos_q",
-                         F.col("rank").cast("int").alias("rank")))
+                        entries=entries)
+    return rank_topk(pairs, "cos_q", k_neighbors, desc=True, key="qid")
 
 
 # ------------------------------------------- embedding-space outliers

@@ -7107,10 +7107,8 @@ def ann_pq_recall(spark, sf_dir):
               .withColumn("dist",
                           F.round(similarity.l2sq(F.col("va"),
                                                   F.col("vb")), 6)))
-    w = Window.partitionBy("id").orderBy(F.col("dist").asc(),
-                                         F.col("neighbor_id"))
-    truth = (pairs.withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") <= 5).select("id", "neighbor_id"))
+    truth = (similarity.rank_topk(pairs, "dist", 5)
+             .select("id", "neighbor_id"))
     pq = (similarity.pq_adc_topk(e, "vec_id", "embedding",
                                  k_neighbors=5, m=_PQ_M, k=_PQ_K)
           .select("id", "neighbor_id").withColumn("hit_s", F.lit(1)))
@@ -7501,7 +7499,7 @@ def ann_binary_rerank_topk(spark, sf_dir):
     ann_binary_rerank_recall quantifies how much of raw binary
     search's recall loss the re-rank buys back.
 
-    Scale shape: stage 1 is the certified salted cell meet over 1-bit
+    Scale shape: stage 1 is the salted cell meet (_ivf_meet) over 1-bit
     codes; stage 2 is two slim id-keyed equi-joins (candidates x
     vectors) + one per-query window — never an all-pairs float
     pass."""
@@ -7521,12 +7519,7 @@ def ann_binary_rerank_topk(spark, sf_dir):
                           F.round(similarity.dot(F.col("va"),
                                                  F.col("vb"))
                                   / (F.col("na") * F.col("nb")), 6)))
-    w = Window.partitionBy("id").orderBy(F.col("cos_sim").desc(),
-                                         F.col("neighbor_id"))
-    return (rr.withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= 5)
-              .select("id", "neighbor_id", "cos_sim",
-                      F.col("rank").cast("int").alias("rank")))
+    return similarity.rank_topk(rr, "cos_sim", 5, desc=True)
 
 
 _BQ_RERANK_RECALL_SQL = f"""
@@ -7666,15 +7659,12 @@ def ann_ivfbq_batch_search(spark, sf_dir):
     the serving-shape row for all three quantized index families
     (ivfpq / ivfsq / ivfbq): a BOUNDED query batch (vec_id % 100 = 0,
     1% of the corpus) searches a frozen index built over the whole
-    corpus via injected inverted-list entries, with
-    broadcast_queries=True — the explicitly gated hint broadcasting
-    the encoded QUERY batch (1 bit/dim: the smallest broadcast of
-    the three). The inverted-list meet stays the salted equi-join in
-    every mode.
+    corpus via injected inverted-list entries. The inverted-list meet
+    stays the salted equi-join in every mode.
 
-    Scale shape at serving: two linear passes over the BATCH (coarse
-    probe + sign-bit encode), a broadcast of batch-sized bit rows,
-    hamming against only the probed cells' lists."""
+    Scale shape at serving: one linear pass over the BATCH (coarse
+    probe carrying each query's sign bits), hamming against only the
+    probed cells' lists."""
     e = _t(spark, sf_dir, "embeddings")
     coarse = similarity.train_ivf_codebook(
         e, "vec_id", "embedding", n_cells=8, iters=2)
@@ -7683,8 +7673,7 @@ def ann_ivfbq_batch_search(spark, sf_dir):
     batch = e.filter(F.col("vec_id") % 100 == 0)
     return similarity.ivfbq_topk(
         batch, "vec_id", "embedding", k_neighbors=5, n_cells=8,
-        nprobe=4, coarse=coarse, entries=entries,
-        broadcast_queries=True)
+        nprobe=4, coarse=coarse, entries=entries)
 
 
 _IVFSQ_RECALL_SQL = f"""
@@ -7790,17 +7779,13 @@ def ann_ivfsq_batch_search(spark, sf_dir):
     (vec_id % 100 = 0 — 1% of the corpus, the online-serving case)
     searches a frozen index built over the whole corpus. Exercises
     the incremental plumbing end to end: pre-built inverted-list
-    entries injected via entries=, a frozen coarse codebook, and
-    broadcast_queries=True — the explicitly gated hint that
-    broadcasts the encoded QUERY batch (tiny by caller assertion
-    here; never hinted in the self-search form where it is
-    corpus-sized). The inverted-list meet stays the salted equi-join
-    in every mode — the index side is corpus-sized always.
+    entries injected via entries= and a frozen coarse codebook. The
+    inverted-list meet stays the salted equi-join in every mode — the
+    index side is corpus-sized always.
 
-    Scale shape at serving: per batch, two linear passes over the
-    BATCH (coarse probe + int8 encode), a broadcast of batch-sized
-    code rows, and integer-dot scoring against only the probed
-    cells' lists."""
+    Scale shape at serving: per batch, one linear pass over the BATCH
+    (coarse probe carrying each query's int8 codes) and integer-dot
+    scoring against only the probed cells' lists."""
     e = _t(spark, sf_dir, "embeddings")
     coarse = similarity.train_ivf_codebook(
         e, "vec_id", "embedding", n_cells=8, iters=2)
@@ -7809,8 +7794,7 @@ def ann_ivfsq_batch_search(spark, sf_dir):
     batch = e.filter(F.col("vec_id") % 100 == 0)
     return similarity.ivfsq_topk(
         batch, "vec_id", "embedding", k_neighbors=5, n_cells=8,
-        nprobe=4, coarse=coarse, entries=entries,
-        broadcast_queries=True)
+        nprobe=4, coarse=coarse, entries=entries)
 
 
 # ----------------------------------------------------------------------
@@ -7959,11 +7943,9 @@ def ann_ivfpq_recall(spark, sf_dir):
     tp = (a.join(F.broadcast(b), F.col("id") != F.col("neighbor_id"))
            .withColumn("dist", F.round(similarity.l2sq(F.col("va"),
                                                        F.col("vb")), 6)))
-    tw = Window.partitionBy("id").orderBy(F.col("dist").asc(),
-                                          F.col("neighbor_id"))
-    truth = (tp.withColumn("rn", F.row_number().over(tw))
-               .filter(F.col("rn") <= 5).select("id", "neighbor_id")
-               .withColumn("nprobe", F.explode(sweep_lits)))
+    truth = (similarity.rank_topk(tp, "dist", 5)
+             .select("id", "neighbor_id")
+             .withColumn("nprobe", F.explode(sweep_lits)))
     j = truth.join(topk, ["nprobe", "id", "neighbor_id"], "left")
     return (j.groupBy("nprobe")
              .agg(F.count(F.lit(1)).alias("truth_pairs"),
@@ -8013,7 +7995,7 @@ def ann_ivfpq_rerank_topk(spark, sf_dir):
     instead of the corpus. ann_ivfpq_rerank_recall quantifies what
     the refine buys back over raw ADC ranking (ann_ivfpq_recall).
 
-    Scale shape: stage 1 is the certified salted cell meet over
+    Scale shape: stage 1 is the salted cell meet (_ivf_meet) over
     packed codes; stage 2 is two slim id-keyed equi-joins
     (candidates x vectors) + one per-query window — never an
     all-pairs float pass."""
@@ -8032,12 +8014,7 @@ def ann_ivfpq_rerank_topk(spark, sf_dir):
               .withColumn("dist",
                           F.round(similarity.l2sq(F.col("va"),
                                                   F.col("vb")), 6)))
-    w = Window.partitionBy("id").orderBy(F.col("dist").asc(),
-                                         F.col("neighbor_id"))
-    return (rr.withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= 5)
-              .select("id", "neighbor_id", "dist",
-                      F.col("rank").cast("int").alias("rank")))
+    return similarity.rank_topk(rr, "dist", 5)
 
 
 _IVFPQ_RERANK_RECALL_SQL = f"""
@@ -8085,10 +8062,8 @@ def ann_ivfpq_rerank_recall(spark, sf_dir):
     tp = (a.join(F.broadcast(b), F.col("id") != F.col("neighbor_id"))
            .withColumn("dist", F.round(similarity.l2sq(F.col("va"),
                                                        F.col("vb")), 6)))
-    tw = Window.partitionBy("id").orderBy(F.col("dist").asc(),
-                                          F.col("neighbor_id"))
-    truth = (tp.withColumn("rn", F.row_number().over(tw))
-               .filter(F.col("rn") <= 5).select("id", "neighbor_id"))
+    truth = (similarity.rank_topk(tp, "dist", 5)
+             .select("id", "neighbor_id"))
     j = truth.join(topq, ["id", "neighbor_id"], "left")
     return j.agg(
         F.count(F.lit(1)).alias("truth_pairs"),
@@ -8140,13 +8115,7 @@ def ann_ivfpq_batch_search(spark, sf_dir):
         nprobe=_IVFPQ_NPROBE, m=_PQ_M, k=_PQ_K,
         coarse=coarse, codebooks=pqcb, entries=entries,
         broadcast_query_luts=True)
-    w = Window.partitionBy("qid").orderBy(F.col("approx_dist").asc(),
-                                          F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= 5)
-                 .select(F.col("qid").alias("id"), "neighbor_id",
-                         "approx_dist",
-                         F.col("rank").cast("int").alias("rank")))
+    return similarity.rank_topk(pairs, "approx_dist", 5, key="qid")
 
 
 _IVFPQ_INDEX_PROBE_SQL = f"""
@@ -8204,13 +8173,7 @@ def ann_ivfpq_index_probe(spark, sf_dir):
         nprobe=_IVFPQ_NPROBE, m=_PQ_M, k=_PQ_K,
         coarse=coarse, codebooks=pqcb,
         entries=idx_c.unionByName(idx_b))
-    w = Window.partitionBy("qid").orderBy(F.col("approx_dist").asc(),
-                                          F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= 5)
-                 .select(F.col("qid").alias("id"), "neighbor_id",
-                         "approx_dist",
-                         F.col("rank").cast("int").alias("rank")))
+    return similarity.rank_topk(pairs, "approx_dist", 5, key="qid")
 
 
 _PQ_ENCODE_BATCH_SQL = f"""

@@ -103,19 +103,6 @@ def read_orc(spark: SparkSession, path: str,
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: Sequence[str] = ("region", "nation", "customer", "supplier",
-                                        "part", "orders", "lineitem", "events",
-                                        "documents", "embeddings")) -> dict[str, DataFrame]:
-    """Load the driver testdata star schema (TESTDATA.md)."""
-    out = {}
-    for n in names:
-        p = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(p):
-            out[n] = spark.read.parquet(p)
-    return out
-
-
 #: S6 reader registry keyed on extension; xlsx handled via pandas since
 #: Spark has no native xlsx source (SURVEY S2) — used only off the hot path.
 def read_any(spark: SparkSession, path: str, **kw) -> DataFrame:

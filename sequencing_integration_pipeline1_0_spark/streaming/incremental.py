@@ -58,13 +58,6 @@ def ledger_dedup_stream(stream: DataFrame, keys: Sequence[str],
             .dropDuplicatesWithinWatermark(list(keys)))
 
 
-def high_watermark_filter(stream: DataFrame, ts_col: str, delay: str = "1 day") -> DataFrame:
-    """T2: event-time watermark. Rows older than max(event_time)-delay
-    are dropped by stateful operators downstream — the streaming form
-    of `UploadedDate > last_day` (S_Dropout_Records.Rmd:296)."""
-    return stream.withWatermark(ts_col, delay)
-
-
 def windowed_counts(stream: DataFrame, ts_col: str, group_cols: Sequence[str],
                     window: str = "1 hour", delay: str = "2 hours") -> DataFrame:
     """Submission-lag / lab-monitoring aggregate as an event-time

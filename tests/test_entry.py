@@ -25,3 +25,25 @@ def test_all_queries_run_sf0001(spark, sf_dir):
     for name, fn in e.queries().items():
         df = fn(spark, sf_dir)
         assert df.count() >= 0, name
+
+
+def test_queries_order_priority_then_unconfirmed_then_stalest_green():
+    """queries() leads with _PRIORITY in its listed order, then every
+    query with no green CORRECTNESS_r*.json row, then the confirmed
+    tail sorted stalest-green first (ties in registration order)."""
+    import __spark_entry__ as e
+    from sequencing_integration_pipeline1_0_spark.plans import catalog
+
+    names = list(e.queries())
+    prio = [n for n in e._PRIORITY if n in catalog.Q]
+    assert names[:len(prio)] == prio
+    green = e._latest_green_round()
+    assert green, "no CORRECTNESS_r*.json rows read"
+    rest = names[len(prio):]
+    n_unconfirmed = sum(n not in green for n in rest)
+    assert all(n not in green for n in rest[:n_unconfirmed])
+    tail = rest[n_unconfirmed:]
+    assert tail and all(n in green for n in tail)
+    reg_idx = {n: i for i, n in enumerate(catalog.Q)}
+    keys = [(green[n], reg_idx[n]) for n in tail]
+    assert keys == sorted(keys)

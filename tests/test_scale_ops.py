@@ -1546,6 +1546,51 @@ def test_ivfsq_ivfbq_entries_injection_parity(spark):
         assert inj == dflt
 
 
+
+def test_ivfsq_ivfbq_one_entry_per_row_when_an_id_repeats(spark):
+    """Every input row yields exactly one inverted-list entry, cell and
+    codes from that same row, even when an id repeats; self-search
+    then meets each (query row, other-id entry) pair exactly once
+    (nprobe == n_cells probes every cell, k exceeds every candidate
+    list)."""
+    import random
+    from collections import Counter
+
+    from sequencing_integration_pipeline1_0_spark.operators import similarity
+
+    rng = random.Random(11)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(12)]
+    rows.append((5, [rng.uniform(-1, 1) for _ in range(8)]))
+    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    coarse = similarity.train_ivf_codebook(
+        df, "vec_id", "embedding", n_cells=3, iters=1)
+    for builder in (similarity.ivfsq_index_entries,
+                    similarity.ivfbq_index_entries):
+        ents = builder(df, "vec_id", "embedding", coarse=coarse).collect()
+        assert len(ents) == 13, builder.__name__
+        assert sum(r.neighbor_id == 5 for r in ents) == 2, builder.__name__
+    for topk in (similarity.ivfsq_topk, similarity.ivfbq_topk):
+        got = Counter(r.id for r in topk(
+            df, "vec_id", "embedding", k_neighbors=50, n_cells=3,
+            nprobe=3, coarse=coarse).collect())
+        # id 5 has two query rows, each meeting the 11 other-id entries
+        want = {q: 22 if q == 5 else 12 for q in range(12)}
+        assert dict(got) == want, topk.__name__
+
+
+def test_ivfpq_residual_pairs_empty_input_names_the_operator(spark):
+    """An empty input has no vector dimension to probe: the residual
+    IVF-PQ search fails with a ValueError naming itself, like every
+    other plan-time-eager PQ operator."""
+    import pytest as _pytest
+
+    from sequencing_integration_pipeline1_0_spark.operators import similarity
+
+    empty = spark.createDataFrame(
+        [], "vec_id LONG, embedding ARRAY<DOUBLE>")
+    with _pytest.raises(ValueError, match="ivfpq_residual_pairs"):
+        similarity.ivfpq_residual_pairs(empty, "vec_id", "embedding")
+
 def test_psi_contribs_nonnegative_and_zero_on_identical(spark):
     """PSI invariants: every per-bin contribution is >= 0 ((p-q) and
     ln(p/q) always share sign), and two IDENTICAL cohorts give 0.0
