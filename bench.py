@@ -103,7 +103,8 @@ _FLOOR = "__floor__"
 def run_one(name: str, sf_dir: str) -> None:
     """Child mode: time ONE query (min of 3 executions) in a fresh
     JVM and print {"name": ..., "sec": N}."""
-    from sequencing_integration_pipeline1_0_spark.session import get_spark
+    from sequencing_integration_pipeline1_0_spark.session import (
+        codegen_compiles, get_spark)
     import __spark_entry__ as entrymod
 
     spark = get_spark(f"bench:{name}")
@@ -138,19 +139,24 @@ def run_one(name: str, sf_dir: str) -> None:
             fn(spark, sf_dir).write.format("noop") \
                 .mode("overwrite").save()
     samples = []
+    compiles0 = codegen_compiles(spark)
     for _ in range(3):
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples.append(round(time.perf_counter() - t0, 3))
+        samples.append(time.perf_counter() - t0)
     # sentinel-prefixed so the parent never mis-parses a JSON-shaped
-    # JVM/log4j shutdown line as the result. "sec" stays min-of-3
-    # (unchanged statistic); "samples" carries ALL timed runs so a
-    # noise-contaminated window is visible IN the record (VERDICT r10
-    # item 1 — min alone cannot distinguish a regression from a
-    # stolen-CPU burst; the spread can).
-    print("BENCH_RESULT:" + json.dumps({"name": name,
-                                        "sec": round(min(samples), 3),
-                                        "samples": samples}))
+    # JVM/log4j shutdown line as the result. "sec" stays min-of-3 of
+    # the raw samples, rounded only on output; "samples" carries ALL
+    # timed runs so a noise-contaminated window is visible IN the
+    # record (VERDICT r10 item 1 — min alone cannot distinguish a
+    # regression from a stolen-CPU burst; the spread can).
+    # "codegen_compiles" counts Janino compiles over the timed runs: a
+    # warm plan reuses its classes, so a non-zero count flags a plan
+    # that is built differently on each run.
+    print("BENCH_RESULT:" + json.dumps({
+        "name": name, "sec": round(min(samples), 3),
+        "samples": [round(x, 3) for x in samples],
+        "codegen_compiles": codegen_compiles(spark) - compiles0}))
 
 
 def _steal_jiffies() -> int:
@@ -187,6 +193,7 @@ def main() -> None:
     # JVM+warmup overhead stays OUTSIDE the timed window.
     times: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
+    compiles: dict[str, int] = {}
     here = os.path.abspath(__file__)
 
     def run_child(name: str) -> float:
@@ -205,6 +212,7 @@ def main() -> None:
                 f"(rc={out.returncode}); stderr tail above")
         res = json.loads(lines[-1][len("BENCH_RESULT:"):])
         spreads[name] = res.get("samples", [res["sec"]])
+        compiles[name] = res["codegen_compiles"]
         return res["sec"]
 
     # self-defense instrumentation (VERDICT r10 item 1): host steal
@@ -220,6 +228,7 @@ def main() -> None:
         times[name] = run_child(name)
     floor_end = run_child(_FLOOR)
     floor_end_spread = spreads.pop(_FLOOR)
+    compiles.pop(_FLOOR)
     steal1 = _steal_jiffies()
     steal_sec = round((steal1 - steal0) / 100.0, 1) \
         if steal0 >= 0 and steal1 >= 0 else -1.0
@@ -231,6 +240,7 @@ def main() -> None:
                       "floor_end_sec": floor_end,
                       "floor_samples": floor_spread + floor_end_spread,
                       "samples": spreads,
+                      "codegen_compiles": compiles,
                       "steal_core_sec": steal_sec,
                       "wall_sec": round(time.perf_counter() - t_wall0,
                                         1)}))

@@ -8,6 +8,12 @@ Usage: python tools/selfcheck.py [--vanilla] [sf_dir] [query ...]
 --vanilla runs on a bare SparkSession (no engine session factory) —
 replicating the external driver's environment (Spark 4 ANSI on,
 unknown timezone) to prove no query depends on factory configs.
+
+The DuckDB oracles run in memory only, capped at DUCKDB_MEMORY: an
+oracle that needs more fails by name ("FAIL <query>: duckdb error: Out
+of Memory Error ...") instead of spilling. DuckDB 1.0's
+`max_temp_directory_size` is no guard: under a 4 GB cap one oracle
+wrote 16 GB to its temp directory in 15 s and filled the disk.
 """
 
 from __future__ import annotations
@@ -20,6 +26,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+#: most an oracle may hold; DuckDB's default (80 % of host RAM, then
+#: spill to `.tmp/` under the working directory) leaves nothing for the
+#: Spark JVM beside it and once filled the disk
+DUCKDB_MEMORY = "4GB"
 
 
 def canon(df) -> list[tuple]:
@@ -73,7 +84,8 @@ def main() -> int:
     else:
         from sequencing_integration_pipeline1_0_spark.session import get_spark
         spark = get_spark("selfcheck")
-    con = duckdb.connect()
+    con = duckdb.connect(config={"temp_directory": "",
+                                 "memory_limit": DUCKDB_MEMORY})
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
