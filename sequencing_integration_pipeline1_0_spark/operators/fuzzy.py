@@ -13,7 +13,11 @@ no-match -> did_not_match).
 Spark-first rewrite: the block key becomes an equi-join key, so
 Catalyst plans a shuffled hash/sort-merge join with the Levenshtein
 predicate as a post-filter — NOT a BroadcastNestedLoopJoin (SURVEY §4).
-Skewed blocks (dense birth years) are handled by AQE skew-join.
+Skewed blocks (dense birth years) are handled by AQE skew-join. The
+straight and flipped tests are one residual (`a OR b`) on that one
+join, not two joins + union + dedup: `fuzzy_name_join` returns one row
+per matching (left row, right row) pair, with distance = the smaller
+qualifying distance.
 Banding is a single min-distance window + `when` cascade instead of the
 reference's sequential subtract-and-reroute, with identical semantics
 because each rowid routes by its BEST distance.
@@ -83,125 +87,106 @@ def _osa_leq_udf(k: int):
     return osa
 
 
-def blocked_distance_join(left: DataFrame, right: DataFrame, *,
-                          left_key: str, right_key: str,
-                          block_keys: Sequence[str],
-                          max_dist: int = 3,
-                          how: str = "inner",
-                          dist_col: str = "distance",
-                          spread: bool = True,
-                          length_bucket: bool = False,
-                          metric: str = "levenshtein") -> DataFrame:
-    """Equi-join on block keys + distance(left_key, right_key) <= k.
+def _blocked_meet(left: DataFrame, right: DataFrame,
+                  block_keys: Sequence[str],
+                  tests: Sequence[tuple[str, str, int]],
+                  lev_slack: int = 1) -> tuple[DataFrame, list, list]:
+    """The one blocked join behind both public joins: an equi-join on
+    `block_keys` whose residual keeps a (left row, right row) pair when
+    ANY test (left_key, right_key, k) holds — |len diff| <= k and the
+    bounded levenshtein at lev_slack * k is >= 0.
 
-    metric="levenshtein" (default): pure-JVM bounded levenshtein — the
-    fast path, used by every catalog query. metric="osa": the
-    reference's exact optimal-string-alignment semantics (adjacent
-    transposition costs 1 not 2); JVM still prunes (len diff <= k,
-    bounded levenshtein <= 2k) and the banded-DP pandas UDF scores only
-    the surviving candidates, as a post-join filter — the join plan is
-    identical.
-
-    Both frames must carry the block columns with identical names.
-    Returns left cols + right cols (right's block cols dropped) + dist.
-
-    spread=True round-robin-repartitions the probe side to the session
-    default parallelism when the source collapses to few partitions
-    (a small parquet scan is 1 partition -> 1 task doing every
-    levenshtein; the distance predicate is the cost, not the shuffle).
-    At cluster scale with a large probe side the input already has
-    enough partitions and this is a no-op.
-
-    length_bucket=True adds a LOSSLESS sub-block on key length: since
-    distance <= k forces |len(a)-len(b)| <= k, bucketing by
-    len div (k+1) and probing only the right side's neighbor buckets
-    (b-1, b, b+1 via a 3-way explode) preserves every match while
-    cutting a dense block's candidate pairs by ~bucket-count/3. Use at
-    scale when single block keys (a common birth year) are still
-    millions of rows; leave off when key lengths are near-uniform (the
-    explode would triple work for no pruning).
-    """
-    if metric not in ("levenshtein", "osa"):
-        raise ValueError(f"unknown metric {metric!r}")
-    if metric == "osa" and how != "inner":
-        # the OSA pass is a post-join filter; on an outer join it would
-        # silently drop unmatched rows. Callers wanting left semantics
-        # re-attach non-matches via left_anti (as band routing does).
-        raise ValueError("metric='osa' requires how='inner'")
+    Returns (joined, bounded distance per test, output columns: left
+    cols + right cols minus its block cols). Both frames must carry the
+    block columns with identical names. The probe side is spread first:
+    a small parquet scan is 1 partition -> 1 task doing every
+    levenshtein, and the distance predicate is the cost, not the
+    shuffle (`skew.spread_for_compute` is a no-op on a wide input)."""
+    from .skew import spread_for_compute
     left_cols, right_cols = list(left.columns), list(right.columns)
     block_keys = list(block_keys)
-    if length_bucket:
-        width = max_dist + 1
-        lb = F.floor(F.length(F.col(left_key)) / width)
-        rb = F.floor(F.length(F.col(right_key)) / width)
-        left = left.withColumn("__lb", lb)
-        right = (right
-                 .withColumn("__lb", F.explode(F.array(rb - 1, rb, rb + 1))))
-        block_keys.append("__lb")
-    if spread:
-        from .skew import spread_for_compute
-        left = spread_for_compute(left)
-    l = left.alias("l")
+    l = spread_for_compute(left).alias("l")
     r = right.alias("r")
     cond = None
     for b in block_keys:
         c = F.col(f"l.{b}") == F.col(f"r.{b}")
         cond = c if cond is None else cond & c
-    lk, rk = F.col(f"l.{left_key}"), F.col(f"r.{right_key}")
-    # cheap prefilter: |len(a)-len(b)| > k implies distance > k (both
-    # metrics), so the expensive edit-distance never runs on hopeless
-    # pairs; the bounded 3-arg levenshtein then early-exits at the
-    # bound (returns -1 above it). For OSA the JVM levenshtein bound
-    # widens to 2k (lev <= 2*OSA: a transposition is two lev edits) —
-    # still pruning, never dropping a true OSA match.
-    len_ok = F.abs(F.length(lk) - F.length(rk)) <= max_dist
-    lev_bound = max_dist if metric == "levenshtein" else 2 * max_dist
-    bounded = F.levenshtein(lk, rk, lev_bound)
-    dist_ok = len_ok & (bounded >= 0)
-    cond = dist_ok if cond is None else cond & dist_ok
-    joined = l.join(r, cond, how)
+    # cheap prefilter: |len(a)-len(b)| > k implies distance > k, so the
+    # edit distance never runs on hopeless pairs; the bounded 3-arg
+    # levenshtein then early-exits at its bound (returns -1 above it)
+    hit, bounded = None, []
+    for left_key, right_key, k in tests:
+        lk, rk = F.col(f"l.{left_key}"), F.col(f"r.{right_key}")
+        d = F.levenshtein(lk, rk, lev_slack * k)
+        ok = (F.abs(F.length(lk) - F.length(rk)) <= k) & (d >= 0)
+        hit = ok if hit is None else hit | ok
+        bounded.append(d)
+    cond = hit if cond is None else cond & hit
     keep_r = [c for c in right_cols if c not in set(block_keys)]
+    out_cols = ([F.col(f"l.{c}") for c in left_cols]
+                + [F.col(f"r.{c}") for c in keep_r])
+    return l.join(r, cond, "inner"), bounded, out_cols
+
+
+def blocked_distance_join(left: DataFrame, right: DataFrame, *,
+                          left_key: str, right_key: str,
+                          block_keys: Sequence[str],
+                          max_dist: int = 3,
+                          dist_col: str = "distance",
+                          metric: str = "levenshtein") -> DataFrame:
+    """Inner equi-join on block keys + distance(left_key, right_key) <= k.
+
+    metric="levenshtein" (default): pure-JVM bounded levenshtein — the
+    fast path, used by every catalog query. metric="osa": the
+    reference's exact optimal-string-alignment semantics (adjacent
+    transposition costs 1 not 2); JVM still prunes (len diff <= k,
+    bounded levenshtein <= 2k, valid because lev <= 2*OSA) and the
+    banded-DP pandas UDF scores only the surviving candidates, as a
+    post-join filter — the join plan is identical.
+
+    Both frames must carry the block columns with identical names.
+    Returns left cols + right cols (right's block cols dropped) + dist.
+    Matched pairs only; callers re-attach non-matches via left_anti
+    (as band routing does).
+    """
+    if metric not in ("levenshtein", "osa"):
+        raise ValueError(f"unknown metric {metric!r}")
+    joined, (bounded,), out_cols = _blocked_meet(
+        left, right, block_keys, [(left_key, right_key, max_dist)],
+        lev_slack=1 if metric == "levenshtein" else 2)
     if metric == "osa":
-        osa = _osa_leq_udf(max_dist)(lk, rk)
+        osa = _osa_leq_udf(max_dist)(F.col(f"l.{left_key}"),
+                                     F.col(f"r.{right_key}"))
         return (joined
                 .withColumn(dist_col, osa)
                 .filter(F.col(dist_col) >= 0)
-                .select(*[F.col(f"l.{c}") for c in left_cols],
-                        *[F.col(f"r.{c}") for c in keep_r],
-                        F.col(dist_col)))
-    return joined.select(
-        *[F.col(f"l.{c}") for c in left_cols],
-        *[F.col(f"r.{c}") for c in keep_r],
-        bounded.alias(dist_col),
-    )
+                .select(*out_cols, F.col(dist_col)))
+    return joined.select(*out_cols, bounded.alias(dist_col))
 
 
 def fuzzy_name_join(left: DataFrame, right: DataFrame, *,
                     left_name: str = "name_norm", right_name: str = "name_norm_r",
-                    left_flip: str | None = None, right_flip: str | None = None,
+                    right_flip: str | None = None,
                     block_keys: Sequence[str] = ("dob_year",),
                     max_dist: int = 3, flip_max_dist: int = 2,
-                    dist_col: str = "distance",
-                    metric: str = "levenshtein") -> DataFrame:
-    """J6+J7+J11: straight-name join at <=max_dist UNION a flipped-name
-    variant at <=flip_max_dist, dropDuplicates
-    (fuzzy_matching_functions.R:16-50). The flip pass compares the
-    left STRAIGHT name to the right FLIPPED name — the reference flips
-    exactly one side (fuzzy.Rmd:575-576). Returns matched pairs only
-    (how='inner'); the caller re-attaches non-matches via left_anti
-    for the did_not_match band."""
-    straight = blocked_distance_join(
-        left, right, left_key=left_name, right_key=right_name,
-        block_keys=block_keys, max_dist=max_dist, dist_col=dist_col,
-        metric=metric)
+                    dist_col: str = "distance") -> DataFrame:
+    """J6+J7+J11: the left STRAIGHT name against the right straight
+    name at <= max_dist OR the right FLIPPED name at <= flip_max_dist
+    (fuzzy_matching_functions.R:16-50; the reference flips exactly one
+    side, fuzzy.Rmd:575-576), in ONE blocked join.
+
+    Contract: one row per matching (left row, right row) pair, with
+    `dist_col` = the smaller of the qualifying distances — a pair that
+    matches both ways carries its better one, so band routing sees its
+    best distance. Matched pairs only; the caller re-attaches
+    non-matches via left_anti for the did_not_match band."""
+    tests = [(left_name, right_name, max_dist)]
     if right_flip:
-        flipped = blocked_distance_join(
-            left, right, left_key=left_name, right_key=right_flip,
-            block_keys=block_keys, max_dist=flip_max_dist, dist_col=dist_col,
-            metric=metric)
-        straight = straight.unionByName(flipped).dropDuplicates(
-            [c for c in straight.columns if c != dist_col])
-    return straight
+        tests.append((left_name, right_flip, flip_max_dist))
+    joined, bounded, out_cols = _blocked_meet(left, right, block_keys, tests)
+    dist = (bounded[0] if len(bounded) == 1
+            else F.least(*[F.when(d >= 0, d) for d in bounded]))
+    return joined.select(*out_cols, dist.alias(dist_col))
 
 
 def band_by_distance(matches: DataFrame, *, rowid: str = "rowid",

@@ -341,7 +341,7 @@ def j6_fuzzy_name_pairs(spark, sf_dir):
                      F.col("c_nationkey").alias("block"))
     out = fuzzy.blocked_distance_join(
         left, right, left_key="l_name", right_key="r_name",
-        block_keys=["block"], max_dist=2, how="inner")
+        block_keys=["block"], max_dist=2)
     return (out.filter(F.col("l_custkey") < F.col("r_custkey"))
                .select("l_custkey", "r_custkey", "distance"))
 
@@ -2828,7 +2828,7 @@ def fuzzy_band_routing(spark, sf_dir):
                     F.col("c_nationkey").alias("block"))
     m = fuzzy.blocked_distance_join(
         probe, univ, left_key="name_l", right_key="name_r",
-        block_keys=["block"], max_dist=3, how="inner")
+        block_keys=["block"], max_dist=3)
     m = m.filter(F.col("rowid") != F.col("match_custkey"))
     banded = fuzzy.band_by_distance(
         m, rowid="rowid", dist_col="distance", band_col="band")
@@ -3671,7 +3671,7 @@ def j6b_fuzzy_osa_pairs(spark, sf_dir):
                      F.col("c_nationkey").alias("block"))
     out = fuzzy.blocked_distance_join(
         left, right, left_key="l_name", right_key="r_name",
-        block_keys=["block"], max_dist=2, how="inner", metric="osa")
+        block_keys=["block"], max_dist=2, metric="osa")
     return (out.filter(F.col("l_custkey") < F.col("r_custkey"))
                .select("l_custkey", "r_custkey", "distance"))
 
@@ -5991,7 +5991,7 @@ def j6c_osa_lev_delta(spark, sf_dir):
                      F.col("c_nationkey").alias("block"))
     out = fuzzy.blocked_distance_join(
         left, right, left_key="l_name", right_key="r_name",
-        block_keys=["block"], max_dist=1, how="inner", metric="osa")
+        block_keys=["block"], max_dist=1, metric="osa")
     lev = F.levenshtein("l_name", "r_name")
     return (out.filter((F.col("l_custkey") < F.col("r_custkey"))
                        & (lev == 2))
@@ -6037,7 +6037,7 @@ def j6d_osa_witness(spark, sf_dir):
                      F.col("c_nationkey").alias("block"))
     out = fuzzy.blocked_distance_join(
         left, right, left_key="l_name", right_key="r_name",
-        block_keys=["block"], max_dist=2, how="inner", metric="osa")
+        block_keys=["block"], max_dist=2, metric="osa")
     lev = F.levenshtein("l_name", "r_name")
     return (out.filter((F.col("l_custkey") < F.col("r_custkey"))
                        & (lev == F.col("distance")))
@@ -10393,7 +10393,7 @@ def link_fellegi_sunter(spark, sf_dir):
                      F.col("c_nationkey").alias("block"))
     pairs = (fuzzy.blocked_distance_join(
                  left, right, left_key="l_name", right_key="r_name",
-                 block_keys=["block"], max_dist=3, how="inner")
+                 block_keys=["block"], max_dist=3)
              .filter(F.col("l_custkey") < F.col("r_custkey")))
     gname = (F.when(F.col("distance") == 0, F.lit(2))
               .when(F.col("distance") <= 2, F.lit(1))

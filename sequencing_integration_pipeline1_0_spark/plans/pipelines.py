@@ -283,18 +283,6 @@ def fuzzy_match_path(candidates: DataFrame, wdrs_universe: DataFrame, *,
     return out
 
 
-def fuzzy_conservation_audit(candidates: DataFrame,
-                             routes: dict[str, DataFrame]) -> DataFrame:
-    """T6 rows_printed accounting: candidates that landed in no route
-    (must be empty; non-empty rows become next run's saved_rows,
-    fuzzy.Rmd:1079-1085)."""
-    ids = None
-    for df in routes.values():
-        cur = df.select("rowid").dropDuplicates()
-        ids = cur if ids is None else ids.unionByName(cur)
-    return candidates.join(ids.dropDuplicates(), "rowid", "left_anti")
-
-
 # ----------------------------------------------------------------------
 # §3.3 ELR path
 # ----------------------------------------------------------------------

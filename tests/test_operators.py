@@ -72,12 +72,28 @@ def test_fuzzy_name_join_with_flip(spark):
         "case_id int, name_r string, flip_r string, dob_year int")
     out = fuzzy.fuzzy_name_join(
         left, right, left_name="name", right_name="name_r",
-        left_flip="flip", right_flip="flip_r",
+        right_flip="flip_r",
         block_keys=["dob_year"], max_dist=3, flip_max_dist=2)
     got = sorted((r["rowid"], r["case_id"], r["distance"]) for r in out.collect())
     assert (1, 10, 1) in got            # straight fuzzy hit
     assert any(r == (2, 20, 0) for r in got)  # flip hit at distance 0
     assert not any(c == 30 for _, c, _d in got)
+
+
+def test_fuzzy_name_join_two_way_match_keeps_best_distance(spark):
+    """A pair within bound both straight (2) and flipped (0) is one
+    row carrying the smaller distance."""
+    left = spark.createDataFrame(
+        [(1, "ANNA_ANNE", 1980)], "rowid int, name string, dob_year int")
+    right = spark.createDataFrame(
+        [(10, "ANNE_ANNA", "ANNA_ANNE", 1980)],
+        "case_id int, name_r string, flip_r string, dob_year int")
+    out = fuzzy.fuzzy_name_join(
+        left, right, left_name="name", right_name="name_r",
+        right_flip="flip_r", block_keys=["dob_year"],
+        max_dist=3, flip_max_dist=2)
+    got = [(r["rowid"], r["case_id"], r["distance"]) for r in out.collect()]
+    assert got == [(1, 10, 0)]
 
 
 def test_band_by_distance_routes_by_best(spark):
@@ -297,11 +313,6 @@ def test_blocked_join_osa_mode_catches_transpositions(spark):
         block_keys=["dob_year"], max_dist=3, metric="osa")
     assert ({r["rowid"] for r in lev3.collect()}
             == {r["rowid"] for r in osa3.collect()})
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        fz.blocked_distance_join(
-            left, right, left_key="name_norm", right_key="name_norm_r",
-            block_keys=["dob_year"], max_dist=1, metric="osa", how="left")
 
 
 def test_osa_pairs_superset_of_levenshtein_pairs(spark, sf_dir):

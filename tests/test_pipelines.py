@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sequencing_integration_pipeline1_0_spark.operators import cdc
 from sequencing_integration_pipeline1_0_spark.plans import pipelines as P
 
 
@@ -115,10 +116,32 @@ def test_fuzzy_path_banding(spark, fuzzy_candidates, wdrs_universe):
     assert 6 in roster            # only-match rescue despite window miss
     assert unmatched == {3, 4}    # DOB mismatch kills 3; 4 has no candidate
     # every rowid in exactly one route
-    leftovers = P.fuzzy_conservation_audit(fuzzy_candidates, routes)
+    leftovers = cdc.loss_prevention(fuzzy_candidates, routes.values(), "rowid")
     assert leftovers.count() == 0
     all_ids = set(roster) | set(review) | unmatched
     assert all_ids == {1, 2, 3, 4, 5, 6}
+
+
+def test_fuzzy_path_routes_two_way_match_by_flipped_distance(spark):
+    """ANNA ANNE vs case ANNE ANNA: straight distance 2 (review) but
+    flipped distance 0, so the pair routes to roster at distance 0."""
+    cands = spark.createDataFrame(
+        [(7, "ANNA", "ANNE", "1985-02-02", "2021-03-03")],
+        "rowid int, FIRST_NAME string, LAST_NAME string, dob string, cd string")
+    cands = (cands.withColumn("dob_date", F.col("dob").cast("date"))
+                  .withColumn("collection_date", F.col("cd").cast("date"))
+                  .drop("dob", "cd"))
+    univ = spark.createDataFrame(
+        [("200", "ANNE", "ANNA", "1985-02-02", "2021-03-04")],
+        "CASE_ID string, FIRST_NAME string, LAST_NAME string, dob string, ed string")
+    univ = (univ.withColumn("dob_date", F.col("dob").cast("date"))
+                .withColumn("event_date", F.col("ed").cast("date"))
+                .drop("dob", "ed"))
+    routes = P.fuzzy_match_path(cands, univ)
+    roster = [(r["rowid"], r["matched_case_id"], r["distance"])
+              for r in routes["roster"].collect()]
+    assert roster == [(7, "200", 0)]
+    assert routes["review"].count() == 0
 
 
 def test_elr_new_records_two_branch(spark):

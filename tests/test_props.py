@@ -87,7 +87,7 @@ def test_band_routing_partitions_probe_set(spark, rows):
         "match_id int, name_r string, block int")
     m = fuzzy.blocked_distance_join(
         probe, univ, left_key="name_l", right_key="name_r",
-        block_keys=["block"], max_dist=2, how="inner")
+        block_keys=["block"], max_dist=2)
     banded = fuzzy.band_by_distance(m, rowid="rowid")
     matched_ids = {r["rowid"] for r in banded.select("rowid").collect()}
     unmatched = probe.join(banded.select("rowid").dropDuplicates(),
