@@ -20,7 +20,9 @@ per matching (left row, right row) pair, with distance = the smaller
 qualifying distance.
 Banding is a single min-distance window + `when` cascade instead of the
 reference's sequential subtract-and-reroute, with identical semantics
-because each rowid routes by its BEST distance.
+because each rowid routes by its BEST distance; one left join from the
+probe rows then bands every unmatched row did_not_match, so the routing
+is total without an anti-join.
 
 OSA-vs-Levenshtein: Spark ships levenshtein() (no transposition move);
 a transposed pair costs 2 (sub+sub counted) vs OSA's 1. The default
@@ -146,8 +148,8 @@ def blocked_distance_join(left: DataFrame, right: DataFrame, *,
 
     Both frames must carry the block columns with identical names.
     Returns left cols + right cols (right's block cols dropped) + dist.
-    Matched pairs only; callers re-attach non-matches via left_anti
-    (as band routing does).
+    Matched pairs only; `band_by_distance` completes them over the
+    probe rows (did_not_match for a probe row with none).
     """
     if metric not in ("levenshtein", "osa"):
         raise ValueError(f"unknown metric {metric!r}")
@@ -178,8 +180,8 @@ def fuzzy_name_join(left: DataFrame, right: DataFrame, *,
     Contract: one row per matching (left row, right row) pair, with
     `dist_col` = the smaller of the qualifying distances — a pair that
     matches both ways carries its better one, so band routing sees its
-    best distance. Matched pairs only; the caller re-attaches
-    non-matches via left_anti for the did_not_match band."""
+    best distance. Matched pairs only; `band_by_distance` completes
+    them over the probe rows (the did_not_match band)."""
     tests = [(left_name, right_name, max_dist)]
     if right_flip:
         tests.append((left_name, right_flip, flip_max_dist))
@@ -189,22 +191,37 @@ def fuzzy_name_join(left: DataFrame, right: DataFrame, *,
     return joined.select(*out_cols, dist.alias(dist_col))
 
 
-def band_by_distance(matches: DataFrame, *, rowid: str = "rowid",
-                     dist_col: str = "distance",
+def band_by_distance(probe: DataFrame, matches: DataFrame, *,
+                     rowid: str = "rowid", dist_col: str = "distance",
                      band_col: str = "band") -> DataFrame:
-    """§3.2 step 6: each rowid routes once, by its minimum distance —
-    replaces the reference's sequential band-removal loop
-    (fuzzy.Rmd:925-1067) with one window + when cascade."""
+    """§3.2 step 6, total over the probe rows: every `probe` row routes
+    once — the reference's sequential band-removal loop
+    (fuzzy.Rmd:925-1067) as one window + when cascade, completed by
+    ONE left join from `probe`:
+
+      - a rowid with matches keeps its best-distance match rows, banded
+        roster_exact (0) / roster_near (1) / review (2+);
+      - a rowid with no match (a NULL rowid never matches) is one row
+        with NULL match columns, banded did_not_match.
+
+    `rowid` is the probe key. Returns the probe columns, then the
+    `matches` columns the probe lacks, then `band_col`. The matches are
+    built once and every band derives from them — no anti-join re-runs
+    the fuzzy join for the did_not_match band."""
     from pyspark.sql import Window
-    w = Window.partitionBy(rowid)
-    best = F.min(F.col(dist_col)).over(w)
-    kept = matches.withColumn("__best", best).filter(F.col(dist_col) == F.col("__best"))
-    return kept.withColumn(
-        band_col,
-        F.when(F.col(dist_col) == 0, F.lit("roster_exact"))
-         .when(F.col(dist_col) == 1, F.lit("roster_near"))
-         .otherwise(F.lit("review")),
-    ).drop("__best")
+    dist = F.col(dist_col)
+    best = F.min(dist).over(Window.partitionBy(rowid))
+    banded = (matches.withColumn("__best", best)
+              .filter(dist == F.col("__best"))
+              .withColumn(band_col, F.when(dist == 0, "roster_exact")
+                                     .when(dist == 1, "roster_near")
+                                     .otherwise("review")))
+    probe_cols = set(probe.columns)
+    extra = [c for c in matches.columns + [band_col]
+             if c == rowid or c not in probe_cols]
+    return (probe.join(banded.select(*extra), rowid, "left")
+            .withColumn(band_col,
+                        F.coalesce(band_col, F.lit("did_not_match"))))
 
 
 def range_join(left: DataFrame, right: DataFrame, *,

@@ -2817,7 +2817,9 @@ def fuzzy_band_routing(spark, sf_dir):
     """§3.2 composite: blocked fuzzy join -> min-distance banding ->
     complete routing incl. did_not_match — every probe row lands in
     exactly one band (the reference's sequential subtract-and-reroute,
-    fuzzy.Rmd:925-1067, as one window + when cascade)."""
+    fuzzy.Rmd:925-1067, as one window + when cascade). The completion
+    is `band_by_distance`'s one left join from the probe rows, so the
+    fuzzy-join subtree runs once."""
     c = _t(spark, sf_dir, "customer")
     probe = (c.filter(F.col("c_custkey") % 10 == 0)
               .select(F.col("c_custkey").alias("rowid"),
@@ -2830,25 +2832,8 @@ def fuzzy_band_routing(spark, sf_dir):
         probe, univ, left_key="name_l", right_key="name_r",
         block_keys=["block"], max_dist=3)
     m = m.filter(F.col("rowid") != F.col("match_custkey"))
-    banded = fuzzy.band_by_distance(
-        m, rowid="rowid", dist_col="distance", band_col="band")
-    banded = banded.withColumn(
-        "band",
-        F.when(F.col("distance") == 0, "roster_exact")
-         .when(F.col("distance") == 1, "roster_near")
-         .otherwise("review"))
-    matched = banded.select("rowid", "match_custkey", "distance", "band")
-    # single-pass completion: LEFT join from the probe key set instead
-    # of matched ∪ (probe ANTI matched) — the union form executed the
-    # whole fuzzy-join subtree twice (once for the union branch, once
-    # inside the anti). Unmatched probes surface as one null row with
-    # the did_not_match band; matched rows pass through unchanged.
-    return (probe.select("rowid")
-            .join(matched, "rowid", "left")
-            .select("rowid", "match_custkey",
-                    F.col("distance").cast("int").alias("distance"),
-                    F.coalesce("band", F.lit("did_not_match"))
-                     .alias("band")))
+    return (fuzzy.band_by_distance(probe, m, rowid="rowid")
+            .select("rowid", "match_custkey", "distance", "band"))
 
 
 # ----------------------------------------------------------------------
@@ -10913,21 +10898,21 @@ def text_char_entropy(spark, sf_dir):
 
 
 _PCA_BASE_CTES = """
-WITH ex AS (
+WITH ex AS MATERIALIZED (
   SELECT vec_id AS id, CAST(i AS INT) - 1 AS dim,
          CAST(round(CAST(embedding[CAST(i AS INT)] AS DOUBLE), 6)
               AS DECIMAL(18,6)) AS xq
   FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)),
-st AS (
+st AS MATERIALIZED (
   SELECT dim, count(*) AS n, sum(xq) AS s1 FROM ex GROUP BY dim),
-mu AS (SELECT dim, CAST(s1 AS DOUBLE) / n AS mu FROM st),
-g AS (
+mu AS MATERIALIZED (SELECT dim, CAST(s1 AS DOUBLE) / n AS mu FROM st),
+g AS MATERIALIZED (
   SELECT a.dim AS i, b.dim AS j,
          sum(CAST(a.xq AS DECIMAL(19,6))
              * CAST(b.xq AS DECIMAL(19,6))) AS gp,
          count(*) AS nv
   FROM ex a JOIN ex b USING (id) GROUP BY a.dim, b.dim),
-c AS (
+c AS MATERIALIZED (
   SELECT g.i, g.j,
          CAST(round(CAST(gp AS DOUBLE) / nv - mi.mu * mj.mu, 6)
               AS DECIMAL(18,6)) AS qc
@@ -10943,7 +10928,7 @@ def _pca_sweep_chain(cov: str, p: str) -> tuple[str, str]:
     Returns (ctes, final_v_name)."""
     it = similarity.PCA_ITERS
     parts = [f""",
-{p}v0 AS (
+{p}v0 AS MATERIALIZED (
   SELECT dim AS j,
          CAST(round(1.0 / sqrt(CAST(count(*) OVER () AS DOUBLE)), 6)
               AS DECIMAL(18,6)) AS v
@@ -10951,15 +10936,15 @@ def _pca_sweep_chain(cov: str, p: str) -> tuple[str, str]:
     prev = f"{p}v0"
     for k in range(1, it + 1):
         parts.append(f""",
-{p}w{k} AS (
+{p}w{k} AS MATERIALIZED (
   SELECT {cov}.i, sum({cov}.qc * {prev}.v) AS wv
   FROM {cov} JOIN {prev} ON {cov}.j = {prev}.j GROUP BY {cov}.i),
-{p}x{k} AS (
+{p}x{k} AS MATERIALIZED (
   SELECT i, CAST(wv AS DOUBLE) AS wd,
          CAST(round(CAST(wv AS DOUBLE) * CAST(wv AS DOUBLE), 12)
               AS DECIMAL(38,12)) AS w2
   FROM {p}w{k}),
-{p}v{k} AS (
+{p}v{k} AS MATERIALIZED (
   SELECT i AS j,
          CASE WHEN sqrt(CAST(sum(w2) OVER () AS DOUBLE)) > 0
               THEN CAST(round(wd / sqrt(CAST(sum(w2) OVER ()
@@ -10973,8 +10958,12 @@ def _pca_sweep_chain(cov: str, p: str) -> tuple[str, str]:
 
 def _pca_cte_prefix() -> tuple[str, str]:
     """Base covariance CTEs + the top-component sweep chain
-    (unprefixed names — byte-identical to the pre-refactor SQL).
-    Returns (prefix, final_v_name); the PCA oracles compose it."""
+    (unprefixed names). Returns (prefix, final_v_name); the PCA
+    oracles compose it. Every PCA CTE is `AS MATERIALIZED`: DuckDB
+    1.0 inlines a plain CTE at each reference, and the chains
+    reference theirs repeatedly (the covariance from every sweep,
+    each vector twice per Rayleigh quotient), so the inlined top-2
+    oracles ran out of memory at sf0.001."""
     chain, prev = _pca_sweep_chain("c", "")
     return _PCA_BASE_CTES + chain, prev
 
@@ -10983,26 +10972,19 @@ def _rayleigh_sql(cov: str, v: str, t: str, s: str) -> str:
     """Rayleigh-quotient CTE pair (`t`, `s`) over matrix CTE `cov`
     and vector CTE `v` — mirrors similarity._rayleigh exactly."""
     return f""",
-{t} AS (
+{t} AS MATERIALIZED (
   SELECT CAST(round(CAST({cov}.qc AS DOUBLE) * CAST(vi.v AS DOUBLE)
                     * CAST(vj.v AS DOUBLE), 12)
               AS DECIMAL(38,12)) AS t,
          CASE WHEN {cov}.i = {cov}.j THEN {cov}.qc END AS diag
   FROM {cov} JOIN {v} vj ON {cov}.j = vj.j
              JOIN {v} vi ON {cov}.i = vi.j),
-{s} AS (SELECT sum(t) AS e, sum(diag) AS tr FROM {t})"""
+{s} AS MATERIALIZED (SELECT sum(t) AS e, sum(diag) AS tr FROM {t})"""
 
 
 def _pca_sql() -> str:
     prefix, prev = _pca_cte_prefix()
-    return prefix + f""",
-terms AS (
-  SELECT CAST(round(CAST(c.qc AS DOUBLE) * CAST(vi.v AS DOUBLE)
-                    * CAST(vj.v AS DOUBLE), 12)
-              AS DECIMAL(38,12)) AS t,
-         CASE WHEN c.i = c.j THEN c.qc END AS diag
-  FROM c JOIN {prev} vj ON c.j = vj.j JOIN {prev} vi ON c.i = vi.j),
-scal AS (SELECT sum(t) AS e, sum(diag) AS tr FROM terms)
+    return prefix + _rayleigh_sql("c", prev, "terms", "scal") + f"""
 SELECT CAST(v.j AS INT) AS dim, CAST(v.v AS DOUBLE) AS loading,
        round(CAST(e AS DOUBLE), 6) + 0.0 AS eigval,
        CASE WHEN CAST(tr AS DOUBLE) <> 0
@@ -11077,11 +11059,12 @@ def emb_remove_top_component(spark, sf_dir):
     return similarity.pca_remove_top(e, "vec_id", "embedding")
 
 
-def _pca_top2_sql() -> str:
-    prefix, v1 = _pca_cte_prefix()
-    r1 = _rayleigh_sql("c", v1, "t1", "s1")
-    c2 = f""",
-c2 AS (
+def _deflated_sql(v1: str) -> str:
+    """Hotelling-deflated covariance CTE `c2` = c - e1 v1 v1^T over
+    the top-component vector CTE `v1` and its Rayleigh scalar `s1` —
+    mirrors similarity.pca_top2_components' deflation exactly."""
+    return f""",
+c2 AS MATERIALIZED (
   SELECT c.i, c.j,
          CAST(round(CAST(c.qc AS DOUBLE)
                     - (round(CAST(s1.e AS DOUBLE), 6) + 0.0)
@@ -11089,9 +11072,14 @@ c2 AS (
                     6) AS DECIMAL(18,6)) AS qc
   FROM c JOIN {v1} vj ON c.j = vj.j JOIN {v1} vi ON c.i = vi.j
   CROSS JOIN s1)"""
+
+
+def _pca_top2_sql() -> str:
+    prefix, v1 = _pca_cte_prefix()
+    r1 = _rayleigh_sql("c", v1, "t1", "s1")
     chain2, v2 = _pca_sweep_chain("c2", "b")
     r2 = _rayleigh_sql("c2", v2, "t2", "s2")
-    return prefix + r1 + c2 + chain2 + r2 + f"""
+    return prefix + r1 + _deflated_sql(v1) + chain2 + r2 + f"""
 SELECT component, dim, loading, eigval, explained_frac FROM (
   SELECT 1 AS component, CAST(v.j AS INT) AS dim,
          CAST(v.v AS DOUBLE) AS loading,
@@ -11655,18 +11643,9 @@ def _isotropy_sql() -> str:
     report cannot drift from the loading query it summarizes."""
     prefix, v1 = _pca_cte_prefix()
     r1 = _rayleigh_sql("c", v1, "t1", "s1")
-    c2 = f""",
-c2 AS (
-  SELECT c.i, c.j,
-         CAST(round(CAST(c.qc AS DOUBLE)
-                    - (round(CAST(s1.e AS DOUBLE), 6) + 0.0)
-                      * CAST(vi.v AS DOUBLE) * CAST(vj.v AS DOUBLE),
-                    6) AS DECIMAL(18,6)) AS qc
-  FROM c JOIN {v1} vj ON c.j = vj.j JOIN {v1} vi ON c.i = vi.j
-  CROSS JOIN s1)"""
     chain2, v2 = _pca_sweep_chain("c2", "b")
     r2 = _rayleigh_sql("c2", v2, "t2", "s2")
-    return prefix + r1 + c2 + chain2 + r2 + """
+    return prefix + r1 + _deflated_sql(v1) + chain2 + r2 + """
 SELECT round(CAST(s1.e AS DOUBLE), 6) + 0.0 AS eigval1,
        round(CAST(s2.e AS DOUBLE), 6) + 0.0 AS eigval2,
        round(CAST(s1.tr AS DOUBLE), 6) + 0.0 AS trace_var,

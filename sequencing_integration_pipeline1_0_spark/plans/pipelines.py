@@ -1,16 +1,20 @@
 """End-to-end pipeline paths (SURVEY §3) on the domain schemas
 (FIXTURES.md).
 
-Each reference notebook is one lazy Spark DAG here: a single tagged
-routing pass replaces the reference's sequential subtract-and-reroute
-(SURVEY §7 phase 3), and every path returns its routes PLUS a
-loss-prevention audit so the reference's conservation checks
-(`stopifnot(nrow(a)+nrow(b)==nrow(all))`, fuzzy.Rmd:1079-1085) become
-assertable DataFrames instead of runtime stops.
+Each reference notebook is one lazy Spark DAG here, and each routing
+step (`template_route_tags`, `fuzzy_route_tags`,
+`roster_compile_routed`) returns ONE route-tagged frame: a `route`
+column from a single `when` cascade replaces the reference's sequential
+subtract-and-reroute (SURVEY §7 phase 3). Every input row carries
+exactly one route, so the
+reference's conservation checks (`stopifnot(nrow(a)+nrow(b)==nrow(all))`,
+fuzzy.Rmd:1079-1085) are a `groupBy("route").count()` whose counts sum
+to the rows in — no audit pass. Callers split or aggregate the tagged
+frame; writing it once with partitionBy(route) runs the upstream once,
+where one filter per route would re-run it per route.
 
-Scale notes: routes are computed as ONE plan with a `route` tag; the
-link joins shuffle on the accession/name-block key only; vocab joins
-broadcast; nothing collects to the driver.
+Scale notes: the link joins shuffle on the accession/name-block key
+only; vocab joins broadcast; nothing collects to the driver.
 
 References: docs/notebooks/template_submitters.Rmd (§3.1),
 docs/notebooks/fuzzy.Rmd + scripts/Roster_scripts/
@@ -151,23 +155,6 @@ def template_route_tags(
          .otherwise("keep_na"))
 
 
-def template_submitters_path(
-        submissions: DataFrame, wdrs_entire: DataFrame, *,
-        wdrs_sa_values: DataFrame | None = None,
-        valid_lineages: Sequence[str] | None = None,
-        as_of: Column | None = None) -> dict[str, DataFrame]:
-    """Ingested template submissions -> {roster, fuzzy_candidates,
-    keep_na, for_review} (template_submitters.Rmd:558-984); the roster
-    route is rendered to the 17-col contract."""
-    as_of = as_of if as_of is not None else F.current_date()
-    routed = template_route_tags(
-        submissions, wdrs_entire, wdrs_sa_values=wdrs_sa_values,
-        valid_lineages=valid_lineages)
-    out = _route_split(routed, TEMPLATE_ROUTES)
-    out["roster"] = to_roster_schema(out["roster"], as_of=as_of)
-    return out
-
-
 def to_roster_schema(matched: DataFrame, *, as_of: Column) -> DataFrame:
     """Matched submissions -> the 17-col roster contract
     (template_submitters.Rmd:713-811)."""
@@ -216,18 +203,25 @@ def assert_roster_contract(df: DataFrame) -> None:
 # §3.2 fuzzy-matching path
 # ----------------------------------------------------------------------
 
-def fuzzy_match_path(candidates: DataFrame, wdrs_universe: DataFrame, *,
+FUZZY_ROUTES = ("roster", "review", "did_not_match")
+
+
+def fuzzy_route_tags(candidates: DataFrame, wdrs_universe: DataFrame, *,
                      max_dist: int = 3, flip_max_dist: int = 2,
-                     date_window_days: int = 14) -> dict[str, DataFrame]:
-    """Blocked fuzzy linkage with banded routing (fuzzy.Rmd:556-1067).
+                     date_window_days: int = 14) -> DataFrame:
+    """The §3.2 path as ONE tagged pass: blocked fuzzy linkage with
+    banded routing (fuzzy.Rmd:556-1067). Returns one frame with
+    `route` ∈ FUZZY_ROUTES and the finer `band`.
 
     `candidates`: rowid, FIRST_NAME, LAST_NAME, dob_date (date),
     collection_date (date) — pre-normalized (the path upstream).
     `wdrs_universe`: CASE_ID, FIRST_NAME, LAST_NAME (+ alt name cols
     ALT_FIRST_NAME/ALT_LAST_NAME optional), dob_date, event_date.
 
-    Routes: roster (distance 0-1), review (2-3), did_not_match.
-    Invariant: every candidate rowid lands in exactly one route.
+    Routes: roster (best distance 0-1), review (2-3), did_not_match
+    (no match, NULL match columns). `rowid` is the candidate key: every
+    candidate row lands in exactly one route, a matched rowid once per
+    best-distance case, and a NULL rowid is did_not_match.
     """
     left = (candidates
             .withColumn("name_norm", cleaning.annihilate(
@@ -269,18 +263,26 @@ def fuzzy_match_path(candidates: DataFrame, wdrs_universe: DataFrame, *,
     matches = fuzzy.only_match_rescue(matches, rowid="rowid",
                                       in_window=in_window)
 
-    # banding by best distance; review tail keeps 2-3
-    banded = fuzzy.band_by_distance(matches, rowid="rowid")
-    banded = banded.withColumn(
-        "route", F.when(F.col("distance") <= 1, "roster").otherwise("review"))
+    # banding by best distance, total over the candidates
+    banded = fuzzy.band_by_distance(left, matches, rowid="rowid")
+    return banded.withColumn(
+        "route", F.when(F.col("band").isin("roster_exact", "roster_near"),
+                        "roster").otherwise(F.col("band")))
 
-    matched_ids = banded.select("rowid").dropDuplicates()
-    unmatched = (candidates.join(matched_ids, "rowid", "left_anti")
-                 .withColumn("route", F.lit("did_not_match")))
 
-    out = _route_split(banded, ("roster", "review"))
-    out["did_not_match"] = unmatched.drop("route")
-    return out
+def fuzzy_match_path(candidates: DataFrame, wdrs_universe: DataFrame, *,
+                     max_dist: int = 3, flip_max_dist: int = 2,
+                     date_window_days: int = 14) -> dict[str, DataFrame]:
+    """`fuzzy_route_tags` split into {roster, review, did_not_match}.
+    Kept only because perfbench/workloads.py reads the routes as a
+    dict; each entry filters the same lazy plan, so reading all three
+    runs the fuzzy join once per route — read the tagged frame
+    instead."""
+    return _route_split(
+        fuzzy_route_tags(candidates, wdrs_universe, max_dist=max_dist,
+                         flip_max_dist=flip_max_dist,
+                         date_window_days=date_window_days),
+        FUZZY_ROUTES)
 
 
 # ----------------------------------------------------------------------
@@ -422,10 +424,11 @@ def roster_compile_routed(rosters: DataFrame, *,
     add_chunk_id's global numbering of the upload slice).
 
     This is the scale shape: consumers that need per-route outputs
-    should write THIS frame once with partitionBy(route) — filtering
-    the lazy dict (roster_compile below) re-executes the whole upstream
-    per route, tripling the compile work (observed: 3x repeated
-    subtrees, 15 exchanges, in the split-union plan)."""
+    should write THIS frame once with partitionBy(route) — one filter
+    per route re-executes the whole upstream per route, tripling the
+    compile work (observed: 3x repeated subtrees, 15 exchanges, in a
+    split-union plan). The upload rows render to the 17-col contract
+    by selecting ROSTER_COLUMNS (+ chunk)."""
     df = rosters
     # J13 EPI_ISL enrichment with precedence (ROSTER_COMPILE.Rmd:227-245)
     if gisaid is not None:
@@ -476,30 +479,6 @@ def roster_compile_routed(rosters: DataFrame, *,
         F.when(F.col("route") == "upload",
                ((F.row_number().over(w) - F.lit(1)) / F.lit(chunk_rows))
                .cast("int")))
-
-
-def roster_compile(rosters: DataFrame, *, gisaid: DataFrame | None = None,
-                   chunk_rows: int = 500,
-                   chunk_order: Sequence[str] = ("CASE_ID", "SEQUENCE_ACCESSION"),
-                   ) -> dict[str, DataFrame]:
-    """Dict-of-routes wrapper over roster_compile_routed (upload route
-    rendered to the 17-col contract + chunk). NOTE each dict entry
-    filters the same lazy plan — persist the routed frame (or write it
-    partitionBy(route)) before running one action per route."""
-    routed = roster_compile_routed(rosters, gisaid=gisaid,
-                                   chunk_rows=chunk_rows,
-                                   chunk_order=chunk_order)
-    out = _route_split(routed, ("upload", "dropped", "for_review"))
-    clean = out["upload"].drop(
-        *[c for c in out["upload"].columns if c.startswith("QA_")
-          or c == "qa_sum"])
-    contract = clean.select(*[_qcol(c).alias(c) for c in ROSTER_COLUMNS],
-                            F.col("chunk"))
-    assert_roster_contract(contract.drop("chunk"))
-    out["upload"] = contract
-    out["dropped"] = out["dropped"].drop("chunk")
-    out["for_review"] = out["for_review"].drop("chunk")
-    return out
 
 
 def roster_missing_deleted(roster: DataFrame, wdrs_flat: DataFrame,

@@ -97,11 +97,15 @@ def test_fuzzy_name_join_two_way_match_keeps_best_distance(spark):
 
 
 def test_band_by_distance_routes_by_best(spark):
+    probe = spark.createDataFrame([(1,), (2,), (3,)], "rowid int")
     m = spark.createDataFrame(
         [(1, 10, 2), (1, 11, 0), (2, 12, 3)], "rowid int, case_id int, distance int")
-    out = fuzzy.band_by_distance(m).collect()
+    out = fuzzy.band_by_distance(probe, m).collect()
     got = {(r["rowid"], r["case_id"]): r["band"] for r in out}
-    assert got == {(1, 11): "roster_exact", (2, 12): "review"}
+    # rowid 3 has no match: one row, NULL match columns
+    assert got == {(1, 11): "roster_exact", (2, 12): "review",
+                   (3, None): "did_not_match"}
+    assert len(out) == 3
 
 
 def test_range_join(spark):

@@ -50,17 +50,20 @@ def wdrs_entire(spark):
 
 
 def test_template_path_routing(spark, submissions, wdrs_entire):
-    routes = P.template_submitters_path(submissions, wdrs_entire)
-    got = {k: v.count() for k, v in routes.items()}
-    assert got.get("roster", 0) == 2          # ACC1, ACC2
-    assert got.get("fuzzy_candidates", 0) == 1  # ACC9
-    assert got.get("keep_na", 0) == 1         # ACC8
-    assert got.get("for_review", 0) == 2      # ACC3 (status), ACC4 (date)
+    routed = P.template_route_tags(submissions, wdrs_entire)
+    got = {r["route"]: r["count"] for r in routed.groupBy("route").count().collect()}
+    assert set(got) == set(P.TEMPLATE_ROUTES)
+    assert got["roster"] == 2           # ACC1, ACC2
+    assert got["fuzzy_candidates"] == 1  # ACC9
+    assert got["keep_na"] == 1          # ACC8
+    assert got["for_review"] == 2       # ACC3 (status), ACC4 (date)
     # conservation: every submission row routed exactly once
     assert sum(got.values()) == submissions.count()
     # roster side meets the 17-col positional contract
-    P.assert_roster_contract(routes["roster"])
-    r = {x["SEQUENCE_CLINICAL_ACCESSION"]: x for x in routes["roster"].collect()}
+    roster = P.to_roster_schema(routed.filter(F.col("route") == "roster"),
+                                as_of=F.current_date())
+    P.assert_roster_contract(roster)
+    r = {x["SEQUENCE_CLINICAL_ACCESSION"]: x for x in roster.collect()}
     assert r["ACC1"]["CASE_ID"] == "100"
     assert r["ACC1"]["SEQUENCE_ACCESSION"] == "USA/WA-CDC-001/2021"  # prefix stripped
     assert r["ACC2"]["SEQUENCE_SPECIMEN_COLLECTION_DATE"] == "04/01/2021"  # serial 44287
@@ -74,21 +77,26 @@ def test_template_schema_validation(spark, submissions):
             submissions.select(*reversed(submissions.columns)))
 
 
+def _candidates(spark, rows):
+    """Pre-normalized fuzzy candidates from (rowid, first, last, dob,
+    collection date) tuples."""
+    df = spark.createDataFrame(
+        rows, "rowid int, FIRST_NAME string, LAST_NAME string, dob string, cd string")
+    return (df.withColumn("dob_date", F.col("dob").cast("date"))
+              .withColumn("collection_date", F.col("cd").cast("date"))
+              .drop("dob", "cd"))
+
+
 @pytest.fixture(scope="module")
 def fuzzy_candidates(spark):
-    rows = [
+    return _candidates(spark, [
         (1, "ALICE", "SMITH", "1980-01-01", "2021-01-02"),   # exact -> d0
         (2, "ALICIA", "SMITH", "1980-01-01", "2021-01-02"),  # d2 -> review
         (3, "BOB", "JONES", "1975-05-05", "2021-04-01"),     # d0 but DOB differs -> no match
         (4, "ZELDA", "QUX", "1999-12-31", "2021-06-01"),     # no candidate
         (5, "SMITH", "ALICE", "1980-01-01", "2021-01-02"),   # flipped -> match
         (6, "CAROL", "WHITE", "1990-03-03", "2021-09-09"),   # date out of window, only match -> rescued
-    ]
-    df = spark.createDataFrame(
-        rows, "rowid int, FIRST_NAME string, LAST_NAME string, dob string, cd string")
-    return (df.withColumn("dob_date", F.col("dob").cast("date"))
-              .withColumn("collection_date", F.col("cd").cast("date"))
-              .drop("dob", "cd"))
+    ])
 
 
 @pytest.fixture(scope="module")
@@ -125,12 +133,7 @@ def test_fuzzy_path_banding(spark, fuzzy_candidates, wdrs_universe):
 def test_fuzzy_path_routes_two_way_match_by_flipped_distance(spark):
     """ANNA ANNE vs case ANNE ANNA: straight distance 2 (review) but
     flipped distance 0, so the pair routes to roster at distance 0."""
-    cands = spark.createDataFrame(
-        [(7, "ANNA", "ANNE", "1985-02-02", "2021-03-03")],
-        "rowid int, FIRST_NAME string, LAST_NAME string, dob string, cd string")
-    cands = (cands.withColumn("dob_date", F.col("dob").cast("date"))
-                  .withColumn("collection_date", F.col("cd").cast("date"))
-                  .drop("dob", "cd"))
+    cands = _candidates(spark, [(7, "ANNA", "ANNE", "1985-02-02", "2021-03-03")])
     univ = spark.createDataFrame(
         [("200", "ANNE", "ANNA", "1985-02-02", "2021-03-04")],
         "CASE_ID string, FIRST_NAME string, LAST_NAME string, dob string, ed string")
@@ -142,6 +145,60 @@ def test_fuzzy_path_routes_two_way_match_by_flipped_distance(spark):
               for r in routes["roster"].collect()]
     assert roster == [(7, "200", 0)]
     assert routes["review"].count() == 0
+
+
+def test_fuzzy_route_tags_one_frame(spark, fuzzy_candidates, wdrs_universe):
+    rows = P.fuzzy_route_tags(fuzzy_candidates, wdrs_universe).collect()
+    got = {r["rowid"]: (r["route"], r["band"], r["matched_case_id"])
+           for r in rows}
+    assert len(rows) == len(got) == fuzzy_candidates.count()
+    assert got == {1: ("roster", "roster_exact", "100"),
+                   2: ("review", "review", "100"),
+                   3: ("did_not_match", "did_not_match", None),
+                   4: ("did_not_match", "did_not_match", None),
+                   5: ("roster", "roster_exact", "100"),
+                   6: ("roster", "roster_exact", "103")}
+
+
+def test_fuzzy_route_tags_null_rowid_routes_once(spark, wdrs_universe):
+    """rowid is the candidate key; a NULL key never joins back to its
+    matches, so it is did_not_match — once, even when it matches
+    exactly (a left-anti completion put it in roster AND
+    did_not_match)."""
+    cands = _candidates(spark, [
+        (None, "ALICE", "SMITH", "1980-01-01", "2021-01-02"),
+        (1, "ALICE", "SMITH", "1980-01-01", "2021-01-02"),
+        (2, "ZELDA", "QUX", "1999-12-31", "2021-06-01"),
+        (None, "ZELDA", "QUX", "1999-12-31", "2021-06-01")])
+    got = sorted((r["rowid"] is None, r["rowid"] or 0, r["route"])
+                 for r in P.fuzzy_route_tags(cands, wdrs_universe).collect())
+    assert got == [(False, 1, "roster"), (False, 2, "did_not_match"),
+                   (True, 0, "did_not_match"), (True, 0, "did_not_match")]
+    split = P.fuzzy_match_path(cands, wdrs_universe)
+    assert sum(df.count() for df in split.values()) == cands.count()
+
+
+def test_fuzzy_route_tags_degenerate_inputs(spark, fuzzy_candidates,
+                                            wdrs_universe):
+    """Empty candidates give no rows; an empty universe, NULL names or
+    a NULL dob_date give did_not_match; route counts sum to rows in."""
+    empty_c = fuzzy_candidates.limit(0)
+    assert P.fuzzy_route_tags(empty_c, wdrs_universe).count() == 0
+
+    tagged = P.fuzzy_route_tags(fuzzy_candidates, wdrs_universe.limit(0))
+    counts = tagged.groupBy("route").count().collect()
+    assert [tuple(r) for r in counts] == [("did_not_match", 6)]
+
+    nulls = _candidates(spark, [
+        (1, None, "SMITH", "1980-01-01", "2021-01-02"),
+        (2, "ALICE", None, "1980-01-01", "2021-01-02"),
+        (3, None, None, "1980-01-01", "2021-01-02"),
+        (4, "ALICE", "SMITH", None, "2021-01-02"),
+        (5, "ALICE", "SMITH", "1980-01-01", "2021-01-02")])
+    rows = P.fuzzy_route_tags(nulls, wdrs_universe).collect()
+    got = {r["rowid"]: r["route"] for r in rows}
+    assert len(rows) == 5 and got == {1: "did_not_match", 2: "did_not_match",
+                   3: "did_not_match", 4: "did_not_match", 5: "roster"}
 
 
 def test_elr_new_records_two_branch(spark):
@@ -204,11 +261,18 @@ def test_roster_compile(spark):
     gisaid = spark.createDataFrame(
         [("hCoV-19/USA/WA-CDC-1/2021", "EPI_ISL_111")],
         "virus_name string, epi_isl string")
-    out = P.roster_compile(df, gisaid=gisaid)
-    upload = out["upload"].collect()
-    assert len(upload) == 2  # case 1 (deduped) + case 2
-    by_case = {r["CASE_ID"]: r for r in upload}
+    routed = P.roster_compile_routed(df, gisaid=gisaid)
+    got = {r["route"]: r["count"]
+           for r in routed.groupBy("route").count().collect()}
+    # case 1 (deduped) + case 2 upload; 'bad' row: LOW QUALITY drop
+    # policy; specimen violation -> review
+    assert got == {"upload": 2, "dropped": 1, "for_review": 1}
+    upload = routed.filter(F.col("route") == "upload").select(
+        *[F.col(f"`{c}`") for c in P.ROSTER_COLUMNS], "chunk")
+    P.assert_roster_contract(upload.drop("chunk"))
+    rows = upload.collect()
+    by_case = {r["CASE_ID"]: r for r in rows}
     assert by_case["1"]["SEQUENCE_EPI_ISL"] == "EPI_ISL_111"  # enrichment hit
-    assert all(r["chunk"] == 0 for r in upload)
-    assert out["dropped"].count() == 1      # 'bad' row: LOW QUALITY drop policy
-    assert out["for_review"].count() == 1   # specimen violation
+    assert all(r["chunk"] == 0 for r in rows)
+    assert routed.filter(F.col("route") != "upload") \
+                 .filter(F.col("chunk").isNotNull()).count() == 0

@@ -4,7 +4,8 @@ physical plan free of scale-hostile operators.
 This is the "would it survive 100x" check mechanized: no cartesian or
 nested-loop joins (a blocked/banded rewrite exists for every theta-join
 we need), no row-at-a-time Python UDFs (BatchEvalPython) anywhere, and
-dimension-membership joins must broadcast. Analysis-only — no jobs run.
+dimension-membership joins must broadcast. Analysis-only — no jobs run —
+except the last gate, which reads the plan AQE finally executed.
 """
 
 from __future__ import annotations
@@ -450,3 +451,30 @@ def test_wdrs_qa_dup_tiers_share_one_exchange(plans):
     n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", plan))
     keys = re.findall(r"Arguments: hashpartitioning\((\w+)#", plan)
     assert n_exchanges == 1 and keys == ["sa"], (n_exchanges, keys)
+
+
+def test_fuzzy_route_tags_runs_one_blocked_join(spark):
+    """The tagged §3.2 path runs the blocked levenshtein join once:
+    did_not_match comes from the banded matches by one left join from
+    the candidates, not from an anti-join against a second run of the
+    join. Read from the final (post-AQE) plan after execution."""
+    from pyspark.sql import functions as F
+
+    from sequencing_integration_pipeline1_0_spark.plans import catalog
+    from sequencing_integration_pipeline1_0_spark.plans import pipelines as P
+    subs, entire = catalog._template_frames(spark, SF_DIR)
+    routed = P.template_route_tags(subs, entire)
+    route = F.col("route")
+    universe = routed.filter(route == "roster").select(
+        F.col("matched_case_id").alias("CASE_ID"), "FIRST_NAME",
+        "LAST_NAME", "dob_date", F.col("collection_date").alias("event_date"))
+    candidates = (routed.filter(route == "fuzzy_candidates")
+                  .withColumn("rowid", F.col("LAB_ACCESSION_ID"))
+                  .drop("route", "matched_case_id"))
+    tagged = P.fuzzy_route_tags(candidates, universe)
+    tagged.collect()
+    plan = tagged._jdf.queryExecution().executedPlan().executedPlan().toString()
+    joins = [ln for ln in plan.splitlines()
+             if "Join" in ln and "levenshtein(" in ln]
+    assert len(joins) == 1, joins
+    assert "BroadcastNestedLoopJoin" not in plan

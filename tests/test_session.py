@@ -33,7 +33,7 @@ def test_codegen_cache_holds_more_than_spark_default(spark):
 
 
 def _linkage_chain(spark, sf_dir) -> None:
-    """template_route_tags -> fuzzy_match_path -> roster_compile_routed,
+    """template_route_tags -> fuzzy_route_tags -> roster_compile_routed,
     built from scratch as a scheduled job builds each pass."""
     subs, entire = catalog._template_frames(spark, sf_dir)
     routed = P.template_route_tags(subs, entire)
@@ -44,13 +44,12 @@ def _linkage_chain(spark, sf_dir) -> None:
     candidates = (routed.filter(route == "fuzzy_candidates")
                   .withColumn("rowid", F.col("LAB_ACCESSION_ID"))
                   .drop("route", "matched_case_id"))
-    fz = P.fuzzy_match_path(candidates, universe)
+    fz = P.fuzzy_route_tags(candidates, universe)
     as_of = F.lit("2024-01-15").cast("date")
     rosters = P.to_roster_schema(routed.filter(route == "roster"), as_of=as_of) \
-        .unionByName(P.to_roster_schema(fz["roster"], as_of=as_of))
+        .unionByName(P.to_roster_schema(fz.filter(route == "roster"), as_of=as_of))
     _noop(P.roster_compile_routed(rosters))
-    _noop(fz["review"])
-    _noop(fz["did_not_match"])
+    _noop(fz.filter(route != "roster"))
 
 
 def test_linkage_chain_reuses_its_classes_when_run_again(spark, sf_dir):
